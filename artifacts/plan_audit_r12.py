@@ -42,10 +42,10 @@ SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 # the java-serialization codec (src06/src18 MapInPandas over binary
 # javaser payloads — no JVM-expression decoder exists; adjudicated
 # intrinsic by the r11 verdict).
-# x05/x49 joined in r12: within-bucket embedding pair verify is a
-# deliberate Arrow-batched numpy kernel (tests/test_plans.py PANDAS_OK
-# carries the justification and the bit-equality argument)
-PYTHON_OK = {"x12_", "x14_", "x15_", "x16_", "src06_", "src18_", "x05_", "x49_", "x66_"}
+# x05/x13/x49/x66: the Arrow-batched numpy kernels of
+# operators/similarity.py, built on its numpy kernel primitives (which
+# carry the bit-equality argument)
+PYTHON_OK = {"x12_", "x14_", "x15_", "x16_", "src06_", "src18_", "x05_", "x13_", "x49_", "x66_"}
 
 # nodes that cannot INCREASE the row count of their child: walking
 # through them preserves any bound established below

@@ -118,9 +118,12 @@ def doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) ->
     the cached intermediate and every downstream exchange by ~4x.
 
     Identity contract: xxhash64 is injective on every tested corpus
-    (artifacts/collision_check_r12.py asserts count(distinct gram) ==
-    count(distinct hash) at sf0.001/0.01/0.1, so all derived results
-    are BIT-IDENTICAL to the string form there). At 10^12 distinct
+    (tests/test_review_hardening.py::
+    test_shingle_xxhash64_is_injective_on_corpus asserts
+    count(distinct gram) == count(distinct hash) for the 3- and 8-gram
+    universes, so all derived results are BIT-IDENTICAL to the string
+    form there; artifacts/COLLISION_CHECK_r12.json records the same at
+    sf0.01/0.1). At 10^12 distinct
     shingles (100 TB) the birthday bound expects ~27k colliding PAIRS
     corpus-wide; a collision only perturbs a result when both grams
     co-occur in one candidate pair — the same p≈2^-64 trade the LSH

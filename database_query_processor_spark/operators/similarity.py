@@ -20,13 +20,15 @@ Scale design:
 All float math is done as float→double casts with sequential
 aggregation, which both Spark and DuckDB evaluate bit-identically
 (verified: 500/500 exact matches) — so even the LSH path has a full
-value-hash oracle.
+value-hash oracle. The Arrow/numpy kernels repeat the same fold (see
+the numpy kernel primitives).
 """
 
 from __future__ import annotations
 
 import random
 
+import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -60,6 +62,101 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(
         dot_d(a, b), F.sqrt(dot_d(a, a)) * F.sqrt(dot_d(b, b))
     )
+
+
+def _py_dot(a, b) -> float:
+    """Driver-side double dot product, sequential — bit-identical to
+    dot_d / sql_dot (same fold order, same IEEE ops)."""
+    s = 0.0
+    for x, y in zip(a, b):
+        s += float(x) * float(y)
+    return s
+
+
+def _py_cos(a, b) -> float:
+    import math
+
+    nrm = math.sqrt(_py_dot(a, a)) * math.sqrt(_py_dot(b, b))
+    # zero-norm vector: cosine is undefined — treat as no similarity
+    # (0.0) instead of a driver-side ZeroDivisionError; the Spark-side
+    # `cosine` expression degrades the same comparison-neutral way.
+    return _py_dot(a, b) / nrm if nrm else 0.0
+
+
+# --- numpy kernel primitives -------------------------------------------
+#
+# Every Arrow/numpy kernel below (the IVF/SemDeDup cell assignment, the
+# PQ encode, the pair scans of embedding_dup_pairs and semantic_dedup)
+# is built from these four functions, and this is the one argument for
+# why their results are bit-identical to the Column expressions above
+# and to the DuckDB oracle (sql_dot, _sql_l2sq_sub):
+#   * _np_vectors widens float32 → float64 exactly, as cast("double")
+#     does, and rejects NULL and non-finite vectors: np.argmin/argmax
+#     and `>=` order NaN differently from Spark's and DuckDB's sorts,
+#     so a NaN would silently diverge instead of failing.
+#   * _np_fold adds the float64 products (or squared differences) one
+#     component at a time, left to right from 0.0 — the same IEEE ops
+#     in the same order as dot_d's aggregate() and _py_dot, which the
+#     oracle's list_sum (sql_dot) reproduces; starting from 0.0 as
+#     aggregate() does, an all-zero dot is +0.0 here too.
+#   * _np_cos divides by sqrt(|a|²)·sqrt(|b|²), as `cosine`, and maps a
+#     zero divisor to -inf where try_divide and DuckDB give NULL: below
+#     every real cosine, it fails every `>= threshold` and loses every
+#     argmax, as NULL does in F.greatest(struct) and under DuckDB's
+#     NULLS LAST.
+#   * np.argmax/np.argmin return the FIRST extreme, so kernels that
+#     sort their candidates by id (centroid id, code index) get the
+#     smaller-id tie-break of the SQL `ORDER BY …, id`.
+# Pinned by the x05/x13/x49/x66 oracle checks and tests/test_recall.py.
+
+
+def _np_vectors(values, col: str) -> np.ndarray:
+    """One (n, d) float64 matrix from a column of vectors; raises
+    ValueError naming ``col`` on a NULL, ragged or non-finite vector."""
+    try:
+        mat = np.stack(list(values)).astype(np.float64)
+    except (TypeError, ValueError) as exc:
+        raise ValueError(f"vector column {col!r}: NULL or ragged vector") from exc
+    if not np.isfinite(mat).all():
+        raise ValueError(f"vector column {col!r}: non-finite component")
+    return mat
+
+
+def _np_fold(a: np.ndarray, b: np.ndarray, l2: bool = False) -> np.ndarray:
+    """Σ a_i·b_i (``l2``: Σ (a_i − b_i)²) over the last axis as one
+    sequential fold, broadcasting the leading axes — the numpy mirror
+    of dot_d (``l2``: of the oracle's _sql_l2sq_sub)."""
+    acc = 0.0
+    for i in range(a.shape[-1]):
+        x, y = a[..., i], b[..., i]
+        if l2:
+            x = y = x - y
+        acc = acc + x * y
+    return acc
+
+
+def _np_cos(dots: np.ndarray, denom: np.ndarray) -> np.ndarray:
+    """dots / denom with a zero divisor (a zero-norm vector) → -inf."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom == 0, -np.inf, dots / denom)
+
+
+_PAIR_BLOCK = 64  # rows folded at once: 64 × n temporaries, like one row's (n, 64) product
+
+
+def _np_pair_cosines(mat: np.ndarray):
+    """For each row i of an id-sorted (n, d) matrix, yield (i, cosines
+    of row i to rows i+1…). Rows are folded in blocks of _PAIR_BLOCK,
+    so memory stays linear in n."""
+    nrm = np.sqrt(_np_fold(mat, mat))
+    for lo in range(0, len(mat) - 1, _PAIR_BLOCK):
+        hi = min(lo + _PAIR_BLOCK, len(mat) - 1)
+        cos = _np_cos(
+            _np_fold(mat[lo:hi, None, :], mat[None, lo + 1 :, :]),
+            nrm[lo:hi, None] * nrm[None, lo + 1 :],
+        )
+        for i in range(lo, hi):
+            yield i, cos[i - lo, i - lo :]
 
 
 def _lit_vec(v: list[float]) -> Column:
@@ -259,25 +356,6 @@ IVF_CELLS = 8
 IVF_NPROBE = 2
 
 
-def _py_dot(a, b) -> float:
-    """Driver-side double dot product, sequential — bit-identical to
-    dot_d / sql_dot (same fold order, same IEEE ops)."""
-    s = 0.0
-    for x, y in zip(a, b):
-        s += float(x) * float(y)
-    return s
-
-
-def _py_cos(a, b) -> float:
-    import math
-
-    nrm = math.sqrt(_py_dot(a, a)) * math.sqrt(_py_dot(b, b))
-    # zero-norm vector: cosine is undefined — treat as no similarity
-    # (0.0) instead of a driver-side ZeroDivisionError; the Spark-side
-    # `cosine` expression degrades the same comparison-neutral way.
-    return _py_dot(a, b) / nrm if nrm else 0.0
-
-
 def _ids_codebook(df: DataFrame, id_col: str, vec_col: str, cells: int) -> list[tuple[int, list[float]]]:
     """Deterministic codebook: the vectors of the ``cells`` smallest
     ids (oracle-reproducible in plain SQL)."""
@@ -321,52 +399,26 @@ def _resolve_codebook(
     raise ValueError(f"unknown codebook {codebook!r} (want 'ids' or 'kmeans')")
 
 
-_ASSIGN_LITERAL_MAX = 64  # beyond this, the expression-tree form cliffs
-
-
 def _assign_cells(
     df: DataFrame, id_col: str, vec_col: str, cents: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """argmax-cosine Voronoi assignment of every vector to its nearest
-    centroid; ties break to the smaller cent_id. Both paths are
-    scan-side (no shuffle); the split is about EXPRESSION size:
-
-    * ≤ _ASSIGN_LITERAL_MAX (64) cells: literal argmax (one cosine
-      expression per centroid inside F.greatest) — pure JVM, exactly
-      reproducible by the SQL oracle (the oracle-checked default).
-    * larger codebooks: the per-centroid expression TREES are what
-      cliff — hundreds of aggregate() lambdas in one projection stall
-      planning/codegen for tens of minutes (measured: cells=316 on
-      100k vectors never finished; the Arrow path does it in
-      seconds). The centroid matrix ships in the task closure and
-      each Arrow batch is ONE BLAS matmul + argmax. Ties still go to
-      the smaller cent_id (rows sorted by cid, np.argmax takes the
-      first max), though cosine values may differ from the JVM fold
-      in the last ulp — this is the production path, not the
-      oracle-parity path."""
-    if len(cents) <= _ASSIGN_LITERAL_MAX:
-        best = F.greatest(
-            *[
-                F.struct(
-                    cosine(F.col(vec_col), _lit_vec([float(x) for x in cv])).alias("c"),
-                    F.lit(-cid).alias("nid"),
-                )
-                for cid, cv in cents
-            ]
-        )
-        return df.select(
-            F.col(id_col), F.col(vec_col), (-best.getField("nid")).alias("cell")
-        )
-
-    import numpy as np
-
+    centroid; ties break to the smaller cent_id. One scan-side
+    mapInPandas kernel (no shuffle), oracle-exact at every codebook
+    size (see the numpy kernel primitives): per Arrow batch, the
+    (rows, cells) cosine matrix comes from the shared fold and the
+    first-max argmax over cid-sorted centroids gives the smaller-cid
+    tie-break of the oracle's ORDER BY cos DESC, cent_id. ``cell``
+    has the centroid ids' type: long for integer ids (k-means
+    indices, integral id columns), else the id column's type."""
     ordered = sorted(cents, key=lambda cc: cc[0])
-    cid_arr = np.array([cid for cid, _ in ordered], dtype=np.int64)
-    C = np.array([cv for _, cv in ordered], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
+    cid_arr = np.array([cid for cid, _ in ordered])
+    C = _np_vectors([cv for _, cv in ordered], vec_col)
+    c_nrm = np.sqrt(_np_fold(C, C))
     id_t = df.schema[id_col].dataType.simpleString()
+    cell_t = "long" if isinstance(ordered[0][0], int) else id_t
     vec_t = df.schema[vec_col].dataType.simpleString()
-    schema = f"`{id_col}` {id_t}, `{vec_col}` {vec_t}, cell long"
+    schema = f"`{id_col}` {id_t}, `{vec_col}` {vec_t}, cell {cell_t}"
 
     def assign(batches):
         import pandas as pd
@@ -374,16 +426,15 @@ def _assign_cells(
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            V = _np_vectors(pdf[vec_col], vec_col)
+            cos = _np_cos(
+                _np_fold(V[:, None, :], C), np.sqrt(_np_fold(V, V))[:, None] * c_nrm
             )
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-            best_idx = np.argmax(Vn @ Cn.T, axis=1)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
                     vec_col: pdf[vec_col],
-                    "cell": cid_arr[best_idx],
+                    "cell": cid_arr[np.argmax(cos, axis=1)],
                 }
             )
 
@@ -414,9 +465,9 @@ def ann_ivf_topk(
         cell balance (recall pinned vs the exact oracle in
         tests/test_recall.py).
 
-    Scale path (100 TB): centroids are tiny → collected + broadcast
-    into a literal argmax expression, so assignment is a pure scan-side
-    map (no shuffle, no UDF). Writing the corpus partitioned by
+    Scale path (100 TB): centroids are tiny → collected and shipped
+    in the task closure of _assign_cells' Arrow kernel, so assignment
+    is a pure scan-side map (no shuffle). Writing the corpus partitioned by
     ``cell`` turns probing into partition pruning: a query touches
     nprobe/cells of the data."""
     cents = _resolve_codebook(df, id_col, vec_col, cells, codebook)
@@ -452,29 +503,6 @@ PQ_M = 8   # subspaces (64-dim -> 8 subvectors of 8)
 PQ_K = 16  # centroids per subspace codebook
 
 
-def _l2sq(a: Column, b: Column) -> Column:
-    """Σ (double(a_i) − double(b_i))², sequential fold — the same
-    bit-stable shape as dot_d, mirrored by _sql_l2sq_sub."""
-    return F.aggregate(
-        F.zip_with(
-            a, b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _py_l2sq(a, b) -> float:
-    """Driver-side mirror of _l2sq (same fold order and IEEE ops)."""
-    s = 0.0
-    for x, y in zip(a, b):
-        d = float(x) - float(y)
-        s += d * d
-    return s
-
-
 def ann_pq_rerank(
     df: DataFrame,
     id_col: str,
@@ -507,18 +535,17 @@ def ann_pq_rerank(
     (gated in tests/test_recall.py); production tuning is
     per-subspace k-means + pool ≈ 10-20×k.
 
-    Cross-engine exactness: encode is argmin of bit-identical
-    sequential L2² folds with code-index tie-break; ADC sums m
-    doubles in subspace order (first-element-init fold both sides);
-    ROUND 9 + id tie-break before the pool cut; rerank is the proven
-    cosine contract.
+    Cross-engine exactness: encode is the first-min argmin of the
+    shared L2² fold (see the numpy kernel primitives), so ties go to
+    the smaller code index; ADC sums m doubles in subspace order
+    (first-element-init fold both sides); ROUND 9 + id tie-break
+    before the pool cut; rerank is the proven cosine contract.
 
     Scale shape (100 TB): ONE bounded collect (ncodes rows); encode
-    is a scan-side literal expression (m·ncodes small 8-dim folds —
-    far below the IVF literal-argmax cliff documented at
-    _ASSIGN_LITERAL_MAX); at scale the codes column is materialized
-    once and the ADC scan reads m bytes/vector instead of the float
-    corpus, with the distance tables riding the task closure."""
+    is a scan-side Arrow kernel with the codebook and the query's
+    distance tables riding the task closure; at scale the codes
+    column is materialized once and the ADC scan reads m bytes/vector
+    instead of the float corpus."""
     cents = _ids_codebook(df, id_col, vec_col, ncodes)
     q_row = df.filter(F.col(id_col) == query_id).select(vec_col).first()
     if q_row is None:
@@ -532,53 +559,28 @@ def ann_pq_rerank(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible into {m} subspaces")
     d = dim // m
-    # driver-side query↔centroid distance tables: T[s][j], O(m·ncodes·d)
-    tables = [
-        [
-            _py_l2sq(qv[s * d : (s + 1) * d], cv[s * d : (s + 1) * d])
-            for _, cv in cents
-        ]
-        for s in range(m)
-    ]
-    # per-subspace encode: argmin L2² over the codebook, ties to the
-    # smaller code index; then ADC = left-assoc sum of table lookups
-    # in subspace order. Since r12 this runs as an Arrow-batched numpy
-    # kernel (guide §4.3) — the expression form was m·ncodes (128)
-    # interpreted 8-dim folds per ROW (CodegenFallback), ~8 s of
-    # x66's 9 s at sf0.1 (OPTIMIZATION_r12.md §16 has the
-    # decomposition). Bit-equality with the expression form: per-(row, code)
-    # L2² is the same (x−y)·(x−y) float64 products accumulated by
-    # np.cumsum in the fold's left-to-right order; np.argmin returns
-    # the FIRST minimum = the sort_array (dist, j) tie-break; the ADC
-    # sum adds per-subspace lookups in the same left-assoc order; the
-    # distance tables are the same driver-computed float64 values.
-    cent_subs = [
-        [
-            [float(x) for x in cv[s * d : (s + 1) * d]]
-            for _, cv in cents
-        ]
-        for s in range(m)
-    ]
+    # query↔centroid distance tables T[s][j], once on the driver; per
+    # subspace a row's code is the nearest centroid and its ADC
+    # distance the left-assoc sum of its codes' table entries. Since
+    # r12 this is an Arrow kernel: the expression form was m·ncodes
+    # (128) interpreted 8-dim folds per row (CodegenFallback), ~8 s of
+    # x66's 9 s at sf0.1 (OPTIMIZATION_r12.md §16).
+    qc = _np_vectors([qv] + [cv for _, cv in cents], vec_col)
+    q, cb = qc[0], qc[1:]
+    subs = [slice(s * d, (s + 1) * d) for s in range(m)]
+    tables = [_np_fold(q[sl], cb[:, sl], l2=True) for sl in subs]
 
     def _encode(batches):
-        import numpy as np
         import pandas as pd
 
-        cb = [np.array(cs, dtype=np.float64) for cs in cent_subs]  # m × (ncodes, d)
-        tabs = [np.array(t, dtype=np.float64) for t in tables]  # m × (ncodes,)
         for pdf in batches:
-            if not len(pdf):
+            if pdf.empty:
                 continue
-            mat = np.stack(pdf["_v"].to_numpy()).astype(np.float64, copy=False)
+            mat = _np_vectors(pdf["_v"], vec_col)
             acc = None
-            for s in range(m):
-                sub = mat[:, s * d : (s + 1) * d]
-                dm = np.empty((len(pdf), len(cb[s])), dtype=np.float64)
-                for j in range(len(cb[s])):
-                    diff = sub - cb[s][j]
-                    dm[:, j] = np.cumsum(diff * diff, axis=1)[:, -1]
-                t = tabs[s][np.argmin(dm, axis=1)]
-                acc = t if acc is None else acc + t
+            for sl, t in zip(subs, tables):
+                code = np.argmin(_np_fold(mat[:, None, sl], cb[:, sl], l2=True), axis=1)
+                acc = t[code] if acc is None else acc + t[code]
             yield pd.DataFrame(
                 {"_id": pdf["_id"], "_v": pdf["_v"], "_approx": acc}
             )
@@ -609,10 +611,10 @@ def ann_pq_rerank(
 
 
 def _sql_l2sq_sub(a: str, b: str, s: str, d: int) -> str:
-    """DuckDB expression mirroring _l2sq over subspace ``s`` (0-based
-    column/expr) of ``a``/``b``: 1-based element indexing, same diff
-    product (NOT pow — integer-exponent pow may take a different
-    libm path), same sequential fold."""
+    """DuckDB expression mirroring _np_fold(l2=True) over subspace
+    ``s`` (0-based column/expr) of ``a``/``b``: 1-based element
+    indexing, same diff product (NOT pow — integer-exponent pow may
+    take a different libm path), same sequential fold."""
     diff = f"(cast({a}[{s}*{d}+i] as double) - cast({b}[{s}*{d}+i] as double))"
     return f"list_sum([{diff} * {diff} for i in range(1, {d + 1})])"
 
@@ -686,15 +688,11 @@ def embedding_dup_pairs(
     are CodegenFallback), measured 13 s of x05's 16 s at sf0.1 with a
     3 s join skeleton (artifacts/DOT_SHAPE_AB_r12.json; a flat 64-term
     codegen chain measured 2x WORSE — it trips the huge-method limit).
-    numpy does the same pair space as one vectorized product per
-    bucket row block. BIT-EQUALITY with the fold (and so with the
-    DuckDB oracle): products are the same float64 multiplies and
-    np.cumsum accumulates them in the same left-to-right order as the
-    sequential aggregate() — the only divergence is a ±0.0 sign on
-    all-zero dots, which the ``cos >= threshold`` gate filters on both
-    sides (threshold > 0); zero-norm vectors give nan here vs NULL in
-    try_divide, equally excluded. Pinned by
-    tests/test_recall.py (banded-vs-exact) and the x05 oracle.
+    The kernel sorts each bucket by id and scans its pairs with
+    _np_pair_cosines, so survivors and their cosines are bit-identical
+    to the fold (see the numpy kernel primitives); ids keep the id
+    column's type. Pinned by tests/test_recall.py (banded-vs-exact)
+    and the x05 oracle.
 
     SIZING (measured, SCALE.md 10x probe): bucket count per band is
     2^(num_planes/bands), a CONSTANT — so expected bucket size grows
@@ -757,37 +755,17 @@ def embedding_dup_pairs(
     ).select("_id", "_v", F.col("bk.band").alias("band"), F.col("bk.bval").alias("bval"))
 
     def _verify(pdf):
-        import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "id_a": np.array([], dtype=np.int64),
-                "id_b": np.array([], dtype=np.int64),
-                "cos": np.array([], dtype=np.float64),
-            }
-        )
-        m = len(pdf)
-        if m < 2:
-            return empty
-        order = np.argsort(pdf["_id"].to_numpy(), kind="stable")
-        ids = pdf["_id"].to_numpy()[order]
-        mat = np.stack(pdf["_v"].to_numpy()[order]).astype(np.float64, copy=False)
-        # sequential (cumsum) accumulation = the aggregate() fold's
-        # left-to-right order — bit-identical survivors (see docstring)
-        nrm = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-        out_a, out_b, out_c = [], [], []
-        for i in range(m - 1):
-            dots = np.cumsum(mat[i] * mat[i + 1 :], axis=1)[:, -1]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dots / (nrm[i] * nrm[i + 1 :])
-            keep = cos >= threshold  # nan (zero-norm) fails, like NULL
+        pdf = pdf.sort_values("_id", kind="stable")
+        ids = pdf["_id"].to_numpy()
+        out_a, out_b, out_c = [ids[:0]], [ids[:0]], [np.empty(0)]
+        for i, cos in _np_pair_cosines(_np_vectors(pdf["_v"], vec_col)):
+            keep = cos >= threshold  # -inf (zero norm) fails, like NULL
             if keep.any():
-                out_a.append(np.full(int(keep.sum()), ids[i], dtype=np.int64))
+                out_a.append(np.repeat(ids[i : i + 1], keep.sum()))
                 out_b.append(ids[i + 1 :][keep])
                 out_c.append(cos[keep])
-        if not out_a:
-            return empty
         return pd.DataFrame(
             {
                 "id_a": np.concatenate(out_a),
@@ -796,9 +774,10 @@ def embedding_dup_pairs(
             }
         )
 
+    id_t = df.schema[id_col].dataType.simpleString()
     return (
         bands_df.groupBy("band", "bval")
-        .applyInPandas(_verify, "id_a long, id_b long, cos double")
+        .applyInPandas(_verify, f"id_a {id_t}, id_b {id_t}, cos double")
         .distinct()
     )
 
@@ -911,22 +890,19 @@ def semantic_dedup(
     approximation. The within-cell pair scan is the same Arrow-batched
     numpy kernel as embedding_dup_pairs' verify (r12, guide §4.3): the
     r11 self-join evaluated THREE interpreted fold dots per candidate
-    pair in the join filter (cosine un-hoisted); the kernel does one
-    vectorized product block per row with cumsum accumulation —
-    bit-identical survivors for tau > 0 (see embedding_dup_pairs'
-    docstring for the float-order argument).
+    pair in the join filter (cosine un-hoisted); the kernel shares
+    _np_pair_cosines, so verdicts are bit-identical to the fold (see
+    the numpy kernel primitives).
 
-    Scale shape (100 TB): codebook is tiny (collected + broadcast
-    into a literal argmax — assignment is scan-side, no shuffle);
-    the only shuffle is the cell-keyed self-join. Within-cell cost
-    is O(size²): production uses enough cells to bound sizes
-    (√n rule) via ``codebook="kmeans"`` — the same knob as IVF; the
-    "ids" codebook keeps the DuckDB oracle exact. Measured (SCALE.md
-    10x probe): cells=8 at 10k vectors is 232s (quadratic within
-    cells), cells=√n at 20k is 142s and linear — dominated by the
-    assignment argmax, which is O(cells·dim) per row; past ~hundreds
-    of cells flip the literal argmax to a broadcast-join of the
-    codebook + per-row window-min so the expression stays bounded."""
+    Scale shape (100 TB): codebook is tiny (collected and shipped to
+    _assign_cells' scan-side kernel, no shuffle); the only shuffle is
+    the cell-keyed pair scan. Within-cell cost is O(size²):
+    production uses enough cells to bound sizes (√n rule) via
+    ``codebook="kmeans"`` — the same knob as IVF; the "ids" codebook
+    keeps the DuckDB oracle exact. Measured (SCALE.md 10x probe):
+    cells=8 at 10k vectors is 232s (quadratic within cells), cells=√n
+    at 20k is 142s and linear — dominated by the assignment argmax,
+    which is O(cells·dim) per row."""
     cents = _resolve_codebook(df, id_col, vec_col, cells, codebook)
     # assigned feeds BOTH self-join sides and the final verdict join:
     # unpersisted, the O(cells·dim)-per-row argmax assignment (the
@@ -937,28 +913,21 @@ def semantic_dedup(
     assigned = _assign_cells(df, id_col, vec_col, cents).persist(
         StorageLevel.MEMORY_AND_DISK
     )
+
     def _drop(pdf):
-        import numpy as np
         import pandas as pd
 
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame({"_dropped_id": np.array([], dtype=np.int64)})
-        order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-        ids = pdf[id_col].to_numpy()[order]
-        mat = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64, copy=False)
-        nrm = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-        dropped = np.zeros(m, dtype=bool)
+        pdf = pdf.sort_values(id_col, kind="stable")
+        dropped = np.zeros(len(pdf), dtype=bool)
         # pair (i < j): j is dropped if cos(i, j) >= tau — EVERY
         # lower-id i counts, dropped or not (no greedy chaining)
-        for i in range(m - 1):
-            dots = np.cumsum(mat[i] * mat[i + 1 :], axis=1)[:, -1]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dots / (nrm[i] * nrm[i + 1 :])
-            dropped[i + 1 :] |= cos >= tau  # nan (zero-norm) fails, like NULL
-        return pd.DataFrame({"_dropped_id": ids[dropped]})
+        for i, cos in _np_pair_cosines(_np_vectors(pdf[vec_col], vec_col)):
+            dropped[i + 1 :] |= cos >= tau
+        return pd.DataFrame({"_dropped_id": pdf[id_col].to_numpy()[dropped]})
 
-    dropped = assigned.groupBy("cell").applyInPandas(_drop, "_dropped_id long")
+    dropped = assigned.groupBy("cell").applyInPandas(
+        _drop, f"_dropped_id {df.schema[id_col].dataType.simpleString()}"
+    )
     return (
         assigned.join(
             dropped, assigned[id_col] == dropped["_dropped_id"], "left"

@@ -41,16 +41,14 @@ PANDAS_OK = {
     # inverse path: per-partition Java-serialization ENCODE
     # (javaser_writer via mapInPandas) + the decode read-back
     "src18_javaser_write_roundtrip",
-    # r12: within-bucket embedding pair verify is a deliberate
-    # Arrow-batched numpy kernel (guide §4.3 vectorizable numeric
-    # batch) — the JVM fold dot is CodegenFallback and measured 13 s
-    # of x05's 16 s at sf0.1 (artifacts/DOT_SHAPE_AB_r12.json);
-    # bit-equality with the fold pinned by the oracle + recall tests
+    # Arrow-batched numpy kernels of operators/similarity.py (IVF/
+    # SemDeDup cell assignment, PQ encode, embedding pair scans): the
+    # JVM fold dot is CodegenFallback and was measured at most of
+    # these queries' time; bit-equality with the fold is argued once
+    # at the numpy kernel primitives and pinned by the oracle checks
     "x05_dedup_embedding",
+    "x13_sim_ann_ivf",
     "x49_dedup_semantic",
-    # r12: PQ encode is the same kernel class — m*ncodes interpreted
-    # L2 folds per row (~8 of x66's 9 s) become one vectorized numpy
-    # pass; bit-equality argument in ann_pq_rerank's encode comment
     "x66_ann_pq_rerank",
 }
 # Streaming specs execute during build (memory-sink result table);
@@ -128,14 +126,21 @@ def test_single_shuffle_for_group_agg(spark):
 
 
 @pytest.mark.parametrize(
-    "name",
-    [s.name for s in all_specs() if s.name not in PANDAS_OK | STREAMING],
+    "name", [s.name for s in all_specs() if s.name not in STREAMING]
 )
 def test_no_python_in_hot_path(spark, name):
-    """Declared queries run JVM-side: no row-at-a-time Python UDFs,
-    no pandas fallbacks outside the explicitly-pandas operators."""
+    """Declared queries run JVM-side: no row-at-a-time Python UDFs
+    anywhere, and pandas only in the explicitly-pandas operators,
+    where it must be Arrow-batched (MapInPandas or
+    FlatMapGroupsInPandas) — which also keeps PANDAS_OK free of stale
+    entries."""
     df = _specs()[name].build(spark, SF)
-    assert not uses_python(df), f"{name}: Python evaluation found in plan"
+    if name not in PANDAS_OK:
+        assert not uses_python(df), f"{name}: Python evaluation found in plan"
+        return
+    plan = explain_str(df, "simple")
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+    assert "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan, plan
 
 
 def test_multimodal_is_arrow_batched(spark):

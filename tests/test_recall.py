@@ -151,41 +151,119 @@ def test_banded_dedup_resolution_validation(planted):
         )
 
 
-def test_assign_cells_vectorized_matches_literal(spark):
-    """The Arrow argmax path (large codebooks) must assign the same
-    cells as the literal-expression path on well-separated data —
-    the literal path cliffs past ~hundreds of centroid expression
-    trees (measured: cells=316 at 100k vectors stalls planning for
-    tens of minutes), which is exactly when the vectorized path
-    takes over."""
-    import numpy as np
-
-    from database_query_processor_spark.operators import similarity as S
-
+def test_assign_cells_exact_argmax_with_zero_vector_and_tie(spark):
+    """The Arrow assignment kernel is exact at a codebook size the old
+    literal-expression path could not plan: every vector's cell equals
+    a driver-side _py_cos argmax with the smaller-cid tie-break — zero
+    mismatches, including a zero vector (all cosines NULL → smallest
+    cid) and a planted exact tie between two identical centroids."""
     rng = np.random.default_rng(7)
     vecs = rng.normal(size=(400, 16)).astype(np.float32)
+    vecs[9] = vecs[5]  # two identical centroids (cids 5 and 9) ...
+    vecs[250] = vecs[5]  # ... and a non-centroid tied on both
+    vecs[300] = 0.0  # zero norm: no defined cosine to any centroid
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cents = SIM._ids_codebook(df, "vec_id", "embedding", cells=100)
+    got = {
+        r.vec_id: r.cell
+        for r in SIM._assign_cells(df, "vec_id", "embedding", cents).collect()
+    }
+    want = {
+        i: min(cents, key=lambda c: (-SIM._py_cos(v, c[1]), c[0]))[0]
+        for i, v in rows
+    }
+    assert got[250] == 5 and got[300] == 0
+    diff = [i for i in want if got[i] != want[i]]
+    assert not diff, f"{len(diff)}/400 assignments differ: {diff[:10]}"
+
+
+def test_np_fold_matches_python_fold():
+    """The numpy fold primitives equal the sequential Python mirrors
+    bit for bit: dots and L2² by _np_fold, and each pair-scan cosine
+    by _py_cos — except a zero-norm pair, which is -inf, not 0.0."""
+    import math
+
+    rng = np.random.default_rng(5)
+    mat = rng.normal(size=(150, 16)).astype(np.float32).astype(np.float64)
+    mat[40] = 0.0
+    rows = mat.tolist()
+    assert SIM._np_fold(mat, mat).tolist() == [SIM._py_dot(r, r) for r in rows]
+    want_l2 = []
+    for r in rows:
+        acc = 0.0
+        for x, y in zip(r, rows[0]):
+            acc += (x - y) * (x - y)
+        want_l2.append(acc)
+    assert SIM._np_fold(mat, mat[0], l2=True).tolist() == want_l2
+    seen = 0
+    for i, cos in SIM._np_pair_cosines(mat):
+        for j, c in enumerate(cos.tolist(), start=i + 1):
+            want = SIM._py_cos(rows[i], rows[j]) if 40 not in (i, j) else -math.inf
+            assert c == want, (i, j, c, want)
+            seen += 1
+    assert seen == 150 * 149 // 2
+
+
+def test_string_ids_match_long_ids(planted):
+    """The pair-scan kernels take their id type from the input schema:
+    on zero-padded string ids (same order as the numbers) they return
+    the same pairs, cosines and verdicts as on long ids."""
+    from pyspark.sql import functions as F
+
+    longs = planted.select(F.col("vec_id").cast("long").alias("vec_id"), "embedding")
+    strs = planted.select(
+        F.format_string("%04d", "vec_id").alias("vec_id"), "embedding"
+    )
+
+    def pairs(df):
+        return {
+            (int(r.id_a), int(r.id_b)): r.cos
+            for r in SIM.embedding_dup_pairs(
+                df, "vec_id", "embedding", threshold=0.9
+            ).collect()
+        }
+
+    def verdicts(df):
+        return {
+            int(r.vec_id): (int(r.cell), r.kept)
+            for r in SIM.semantic_dedup(df, "vec_id", "embedding", tau=0.9).collect()
+        }
+
+    want_pairs = pairs(longs)
+    assert len(want_pairs) >= 95
+    assert pairs(strs) == want_pairs
+    want_verdicts = verdicts(longs)
+    assert len(want_verdicts) == 200
+    assert verdicts(strs) == want_verdicts
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda df: SIM.embedding_dup_pairs(df, "vec_id", "embedding"),
+        lambda df: SIM.semantic_dedup(df, "vec_id", "embedding"),
+        lambda df: SIM.ann_pq_rerank(df, "vec_id", "embedding", query_id=0),
+        lambda df: SIM.ann_ivf_topk(df, "vec_id", "embedding", query_id=0),
+    ],
+    ids=["embedding_dup_pairs", "semantic_dedup", "ann_pq_rerank", "ann_ivf_topk"],
+)
+def test_nan_vector_fails_loudly(spark, op):
+    """A NaN component would sort differently in numpy than in Spark
+    and DuckDB, so the kernels reject it and name the column, instead
+    of returning a result that quietly diverges from the oracle. The
+    NaN row is neither the query nor a codebook vector, so the error
+    comes from the kernel on the action."""
+    rng = np.random.default_rng(3)
+    vecs = rng.normal(size=(60, SIM._EMB_DIM)).astype(np.float32)
+    vecs[57, 3] = np.nan
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<float>",
     )
-    cents = S._ids_codebook(df, "vec_id", "embedding", cells=12)
-    lit = {
-        r.vec_id: r.cell
-        for r in S._assign_cells(df, "vec_id", "embedding", cents).collect()
-    }
-    orig = S._ASSIGN_LITERAL_MAX
-    try:
-        S._ASSIGN_LITERAL_MAX = 1  # force the Arrow path
-        vec = {
-            r.vec_id: r.cell
-            for r in S._assign_cells(df, "vec_id", "embedding", cents).collect()
-        }
-    finally:
-        S._ASSIGN_LITERAL_MAX = orig
-    diff = sum(1 for k in lit if lit[k] != vec[k])
-    # isotropic gaussians: exact cosine ties are measure-zero; allow
-    # at most an ulp-tie stragglers margin
-    assert diff <= 1, f"{diff}/400 assignments differ"
+    out = op(df)
+    with pytest.raises(Exception, match="vector column 'embedding': non-finite"):
+        out.collect()
 
 
 def test_sq8_rerank_recall(spark):

@@ -1266,3 +1266,27 @@ def test_scrub_sql_interpolates_shared_url_pattern():
 
     assert SCRUB_SQL.count(TX.URL_RE) == 2
     assert PIPELINE_SQL.count(TX.URL_RE) == 1
+
+
+@pytest.mark.parametrize("n", [3, 8])
+def test_shingle_xxhash64_is_injective_on_corpus(spark, n):
+    """doc_shingle_hashes stands in 64-bit xxhash64 values for gram
+    strings; its results equal the string form only while no two
+    distinct grams share a hash. Checked on the 3-gram (MinHash /
+    Jaccard / containment) and 8-gram (substring-dedup window key)
+    universes."""
+    from database_query_processor_spark.catalog import load_table
+    from database_query_processor_spark.operators.dedup import doc_shingles
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    row = (
+        doc_shingles(docs, "doc_id", "text", n=n)
+        .select(F.explode("grams").alias("gram"))
+        .agg(
+            F.countDistinct("gram").alias("grams"),
+            F.countDistinct(F.xxhash64("gram")).alias("hashes"),
+        )
+        .first()
+    )
+    assert row.grams > 0
+    assert row.grams == row.hashes, row

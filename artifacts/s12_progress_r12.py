@@ -26,69 +26,59 @@ def one_run(spark, conf_overrides):
         session_expiry_tws,
     )
     from database_query_processor_spark.streaming.windows import (
+        ROCKSDB_STATE_STORE,
+        _conf_scope,
         _events_stream,
-        _rocksdb_state_store,
     )
 
-    saved = {}
-    for k, v in conf_overrides.items():
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
-        t0 = time.perf_counter()
-        with _rocksdb_state_store(spark):
-            stream = _events_stream(spark, SF_DIR)
-            out = session_expiry_tws(stream)
-            t_build = time.perf_counter()
-            root = tempfile.mkdtemp(prefix="dqps_s12probe_")
-            atexit.register(shutil.rmtree, root, ignore_errors=True)
-            q = (
-                out.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", f"{root}/out")
-                .option("checkpointLocation", f"{root}/ckpt")
-                .start()
-            )
-            t_start = time.perf_counter()
-            try:
-                q.processAllAvailable()
-                t_done = time.perf_counter()
-                progress = [json.loads(p.json) for p in q.recentProgress]
-            finally:
-                q.stop()
-            t_stop = time.perf_counter()
-        batches = []
-        for p in progress:
-            row = {"batchId": p.get("batchId"), "rows": p.get("numInputRows"),
-                   "durationMs": p.get("durationMs")}
-            ops = p.get("stateOperators") or []
-            if ops:
-                o = ops[0]
-                row["state"] = {k: o.get(k) for k in
-                                ("allUpdatesTimeMs", "commitTimeMs",
-                                 "timerProcessingTimeMs", "numRowsUpdated")}
-                cm = o.get("customMetrics") or {}
-                row["rocksdb"] = {k: cm.get(k) for k in
-                                  ("rocksdbCommitCheckpointLatency",
-                                   "rocksdbCommitFileSyncLatencyMs",
-                                   "rocksdbCommitFlushLatency",
-                                   "rocksdbLoadLatencyMs",
-                                   "rocksdbSaveZipFilesLatencyMs")}
-            batches.append(row)
-        return {
-            "build_s": round(t_build - t0, 3),
-            "start_s": round(t_start - t_build, 3),
-            "process_s": round(t_done - t_start, 3),
-            "stop_s": round(t_stop - t_done, 3),
-            "total_s": round(t_stop - t0, 3),
-            "batches": batches,
-        }
-    finally:
-        for k, old in saved.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
+    t0 = time.perf_counter()
+    with _conf_scope(spark, {**ROCKSDB_STATE_STORE, **conf_overrides}):
+        stream = _events_stream(spark, SF_DIR)
+        out = session_expiry_tws(stream)
+        t_build = time.perf_counter()
+        root = tempfile.mkdtemp(prefix="dqps_s12probe_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        q = (
+            out.writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", f"{root}/out")
+            .option("checkpointLocation", f"{root}/ckpt")
+            .start()
+        )
+        t_start = time.perf_counter()
+        try:
+            q.processAllAvailable()
+            t_done = time.perf_counter()
+            progress = [json.loads(p.json) for p in q.recentProgress]
+        finally:
+            q.stop()
+        t_stop = time.perf_counter()
+    batches = []
+    for p in progress:
+        row = {"batchId": p.get("batchId"), "rows": p.get("numInputRows"),
+               "durationMs": p.get("durationMs")}
+        ops = p.get("stateOperators") or []
+        if ops:
+            o = ops[0]
+            row["state"] = {k: o.get(k) for k in
+                            ("allUpdatesTimeMs", "commitTimeMs",
+                             "timerProcessingTimeMs", "numRowsUpdated")}
+            cm = o.get("customMetrics") or {}
+            row["rocksdb"] = {k: cm.get(k) for k in
+                              ("rocksdbCommitCheckpointLatency",
+                               "rocksdbCommitFileSyncLatencyMs",
+                               "rocksdbCommitFlushLatency",
+                               "rocksdbLoadLatencyMs",
+                               "rocksdbSaveZipFilesLatencyMs")}
+        batches.append(row)
+    return {
+        "build_s": round(t_build - t0, 3),
+        "start_s": round(t_start - t_build, 3),
+        "process_s": round(t_done - t_start, 3),
+        "stop_s": round(t_stop - t_done, 3),
+        "total_s": round(t_stop - t0, 3),
+        "batches": batches,
+    }
 
 
 def main():

@@ -40,14 +40,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from database_query_processor_spark.functions.text import tokens, word_ngrams
-from database_query_processor_spark.operators.ckpt import checkpoint_frame
 
 # --- connected components ------------------------------------------------
 
 
 def connected_components(
     nodes: DataFrame, edges: DataFrame, max_rounds: int = 25,
-    reliable: bool | str = False,
 ) -> DataFrame:
     """Resolve undirected `edges` (id_a, id_b) over `nodes` (node_id)
     into components: returns (node_id, cluster_id) where cluster_id is
@@ -57,8 +55,7 @@ def connected_components(
     Min-label propagation to fixpoint: each round joins current labels
     across edges (both directions) and takes the per-node min. A round
     is one shuffle; convergence needs O(log diameter) rounds. Each
-    round's labels are checkpointed (``reliable`` picks local vs
-    fault-tolerant, ckpt.py), so lineage stays O(1) instead of
+    round's labels are checkpointed, so lineage stays O(1) instead of
     growing one join+agg per round — without it, deep chains
     (high-diameter clusters) re-plan an ever-taller tree and
     eventually blow the planner."""
@@ -82,11 +79,11 @@ def connected_components(
         # for reuse AND truncates lineage at the checkpointed RDD; the
         # superseded round's blocks are released by the ContextCleaner
         # once the old `labels` reference drops.
-        new = checkpoint_frame(
+        new = (
             labels.union(prop)
             .groupBy("node_id")
-            .agg(F.min("cluster_id").alias("cluster_id")),
-            reliable,
+            .agg(F.min("cluster_id").alias("cluster_id"))
+            .localCheckpoint(eager=True)
         )
         new_sum = new.agg(F.sum("cluster_id")).first()[0]
         labels.unpersist()
@@ -444,7 +441,6 @@ def distributed_prefix_scaffold(
     order_cols: list,
     weight: Column | None,
     num_partitions: int,
-    reliable: bool | str = False,
 ) -> DataFrame:
     """The shared two-pass distributed prefix-sum scaffold (used by
     train_order, pack_sequences, budget_select, and temporal
@@ -461,13 +457,10 @@ def distributed_prefix_scaffold(
     recomputable — cache eviction or executor loss re-runs the range
     shuffle, and shuffle-fetch order nondeterminism (SPARK-23207)
     could land rows in different pids than were counted, silently
-    corrupting global positions. ``reliable`` picks the checkpoint
-    flavor (operators/ckpt.py): False = localCheckpoint — executor-
-    resident blocks, a lost block fails the job loudly instead of
-    recomputing differently; True or a dir path = reliable
-    ``checkpoint()`` to a fault-tolerant filesystem, the long-cluster-
-    job setting — executor loss re-reads the files and positions are
-    reproduced bit-identically. Blocks free on GC of the frame.
+    corrupting global positions. An eager ``localCheckpoint`` holds
+    the stamped rows as executor blocks with no lineage below them,
+    so a lost block fails the job loudly instead of recomputing
+    differently. Blocks free on GC of the frame.
 
     The offsets come back as a broadcast JOIN rather than a
     chained-WHEN literal: a CASE over num_partitions arms is O(P)
@@ -475,8 +468,8 @@ def distributed_prefix_scaffold(
     partition counts (thousands). The collect is O(#partitions), not
     O(rows)."""
     keyed = df.repartitionByRange(num_partitions, *order_cols)
-    keyed = checkpoint_frame(
-        keyed.withColumn("pid", F.spark_partition_id()), reliable
+    keyed = keyed.withColumn("pid", F.spark_partition_id()).localCheckpoint(
+        eager=True
     )
     agg = (F.count("*") if weight is None else F.sum(weight)).cast("long")
     totals = {
@@ -489,20 +482,16 @@ def distributed_prefix_scaffold(
 
 def train_order(
     df: DataFrame, id_col: str, num_partitions: int = 32,
-    reliable: bool | str = False,
 ) -> DataFrame:
     """Deterministic global shuffle for training-data ordering:
     assigns each row a position 1..N in det_hash order without a
     single-partition sort. Two passes: (1) range-repartition on the
     shuffle key and count rows per partition; (2) broadcast the
     cumulative offsets (one tiny row per partition) and add them to
-    within-partition row numbers. Output: (id, shuffle_key, pos).
-    ``reliable`` = the scaffold's checkpoint flavor (ckpt.py): pass a
-    fault-tolerant dir (or pre-set one + True) on long cluster jobs."""
+    within-partition row numbers. Output: (id, shuffle_key, pos)."""
     base = df.select(F.col(id_col), det_hash(F.col(id_col)).alias("shuffle_key"))
     joined = distributed_prefix_scaffold(
-        base, ["shuffle_key", id_col], weight=None,
-        num_partitions=num_partitions, reliable=reliable,
+        base, ["shuffle_key", id_col], weight=None, num_partitions=num_partitions
     )
     w = Window.partitionBy("pid").orderBy("shuffle_key", id_col)
     return joined.select(
@@ -518,7 +507,6 @@ def pack_sequences(
     ntok_col: str,
     budget: int = 1024,
     num_partitions: int = 32,
-    reliable: bool | str = False,
 ) -> DataFrame:
     """Sequence packing: lay documents end-to-end in deterministic
     det_hash order and cut fixed token-budget training sequences —
@@ -539,7 +527,7 @@ def pack_sequences(
     )
     joined = distributed_prefix_scaffold(
         base, ["ord_key", "doc_id"], weight=F.col("n_tokens"),
-        num_partitions=num_partitions, reliable=reliable,
+        num_partitions=num_partitions,
     )
     w = Window.partitionBy("pid").orderBy("ord_key", "doc_id")
     start = (
@@ -753,7 +741,6 @@ def budget_select(
     score_col,
     budget: int,
     num_partitions: int = 32,
-    reliable: bool | str = False,
 ) -> DataFrame:
     """Greedy quality-first corpus selection under a global token
     budget — the "fill N tokens with the best data" pretraining
@@ -780,7 +767,6 @@ def budget_select(
     joined = distributed_prefix_scaffold(
         base, [F.col("score").desc(), F.col(id_col).asc()],
         weight=F.col("n_tokens"), num_partitions=num_partitions,
-        reliable=reliable,
     )
     w = Window.partitionBy("pid").orderBy(F.col("score").desc(), F.col(id_col).asc())
     start = (

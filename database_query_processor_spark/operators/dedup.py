@@ -472,7 +472,6 @@ def minhash_dedup_pairs(
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: signatures → banded candidates →
     exact-Jaccard verification of the CANDIDATE PAIRS ONLY (join each
@@ -483,7 +482,7 @@ def minhash_dedup_pairs(
     set (which is what the DuckDB oracle computes quadratically).
 
     The shingle pipeline feeds three consumers (signatures + both
-    verify sides). Default is persist: one tokenize+shingle pass
+    verify sides). It is persisted: one tokenize+shingle pass
     populates a MEMORY_AND_DISK cache that all three branches read
     (cold-cache per call: parity at sf0.1 — 2.47 s vs 2.39 s — and
     −27% at sf1, 5.1 s vs 7.0 s, where the three recomputed corpus
@@ -493,11 +492,7 @@ def minhash_dedup_pairs(
     candidate-doc shingles behind a broadcast+repartition (the
     broadcast barrier serializes the critical path that the
     recompute-per-branch plan overlaps — sf1 7.6 s), and persist
-    combined with that scoping (10.3 s). ``persist_shingles=False``
-    recomputes per branch for memory-constrained executors — at
-    100 TB the better form of the same idea is checkpointing the
-    shingle table to parquet so all three consumers scan columnar
-    storage.
+    combined with that scoping (10.3 s).
 
     CACHE LIFECYCLE: the persist is lazy and this function returns an
     unmaterialized DataFrame, so nothing here can unpersist it —
@@ -514,9 +509,9 @@ def minhash_dedup_pairs(
     the string pipeline: injective on every tested corpus
     (collision_check_r12.py) → bit-identical results; see
     doc_shingle_hashes for the 100 TB collision analysis."""
-    grams = doc_shingle_hashes(df, id_col, text_col)
-    if persist_shingles:
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
+    grams = doc_shingle_hashes(df, id_col, text_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     cands = lsh_candidate_pairs(_signature_from_hashes64(grams))
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("hs64").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("hs64").alias("grams_b"))

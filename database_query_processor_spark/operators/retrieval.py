@@ -32,6 +32,7 @@ both engines bit-correct.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -670,7 +671,6 @@ def bm25_hard_negatives(
     k: int = 3,
     dup_threshold: float = 0.5,
     pool_m: int = 10,
-    persist_tokens: bool = True,
 ) -> DataFrame:
     """Hard-negative mining for retrieval/embedding training: for
     every query document (rows matching ``query_cond``), the top-k
@@ -706,7 +706,7 @@ def bm25_hard_negatives(
     ≤m rows per query BEFORE the window exchange — the (query × doc)
     score matrix never ships; the dup screen (a broadcast inverted
     index) then touches only queries × m rows. The token table is
-    persisted by default (one tokenize pass feeds dl, qterms, tf —
+    persisted (one tokenize pass feeds dl, qterms, tf —
     same lifecycle contract as minhash_dedup_pairs' shingle cache).
     At production query-set sizes, additionally df-cap the query
     vocabulary (drop stop-terms) exactly like x04 — the residual
@@ -718,11 +718,7 @@ def bm25_hard_negatives(
         F.col(id_col).alias("doc_id"),
         query_cond.alias("is_q"),
         F.explode(tokens(text_col)).alias("tok"),
-    )
-    if persist_tokens:
-        from pyspark import StorageLevel
-
-        toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     cand = toks.filter(~F.col("is_q"))
     dl = cand.groupBy("doc_id").agg(F.count("*").alias("dl"))
     corpus = dl.agg(

@@ -807,7 +807,6 @@ def value_bars(
     val_col: str,
     threshold_us: int,
     num_partitions: int = 32,
-    reliable: bool | str = False,
 ) -> DataFrame:
     """Threshold bars ("dollar bars" / "volume bars", López de Prado):
     slice the GLOBAL (ts, id)-ordered event stream into bars that each
@@ -841,7 +840,6 @@ def value_bars(
     joined = distributed_prefix_scaffold(
         base, [F.col("_ts").asc(), F.col("_id").asc()],
         weight=F.col("v_us"), num_partitions=num_partitions,
-        reliable=reliable,
     )
     w = W.partitionBy("pid").orderBy(F.col("_ts").asc(), F.col("_id").asc())
     cum_before = F.sum("v_us").over(w) - F.col("v_us") + F.col("_offset")

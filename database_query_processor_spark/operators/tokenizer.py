@@ -30,9 +30,7 @@ demo keeps the whole learner one lazy DAG (each extra round
 re-derives its ancestors, O(rounds²) over the types table). At
 production round counts pass `checkpoint_every=k`: the chain
 checkpoints the types frame every k rounds, bounding every plan's
-lineage at k and making total work O(rounds·k). On a cluster add
-`reliable=<fault-tolerant dir>` (operators/ckpt.py) so a dead
-executor re-reads checkpoint files instead of killing the run.
+lineage at k and making total work O(rounds·k).
 
 The DuckDB oracle (sql_bpe_merges) reproduces the merge bit-for-bit
 with a different mechanism — position explode + run-parity windows
@@ -47,7 +45,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from database_query_processor_spark.functions.text import tokens
-from database_query_processor_spark.operators.ckpt import checkpoint_frame
 
 PAIR_STRUCT = "array<struct<l:string,r:string>>"
 
@@ -114,7 +111,6 @@ def _word_types(df: DataFrame, text_col: str) -> DataFrame:
 
 def _merge_chain(
     types: DataFrame, rounds: int, checkpoint_every: int | None = None,
-    reliable: bool | str = False,
 ) -> tuple[list[DataFrame], DataFrame]:
     """Run `rounds` learn+apply BPE rounds over the types frame.
     Returns (per-round 1-row winner frames, the fully-merged types
@@ -127,10 +123,7 @@ def _merge_chain(
     materializations of the Zipf-bounded types table — the knob a
     production 30k-merge vocabulary run needs. None (the demo
     default) keeps the whole learner one lazy DAG; checkpointing
-    never changes values, only lineage. ``reliable`` picks the
-    checkpoint flavor (ckpt.py): local blocks by default, or a
-    fault-tolerant dir so a 30k-round cluster run survives executor
-    loss instead of failing on a dead localCheckpoint block."""
+    never changes values, only lineage."""
     tops = []
     for rnd in range(rounds):
         pairs = (
@@ -159,14 +152,13 @@ def _merge_chain(
             and (rnd + 1) % checkpoint_every == 0
             and rnd + 1 < rounds
         ):
-            types = checkpoint_frame(types, reliable)
+            types = types.localCheckpoint(eager=True)
     return tops, types
 
 
 def bpe_learn_merges(
     df: DataFrame, text_col: str, rounds: int = 3,
     checkpoint_every: int | None = None,
-    reliable: bool | str = False,
 ) -> DataFrame:
     """Learn the first `rounds` BPE merges from the corpus. Returns
     one row per round: (round, lsym, rsym, merged, pair_count) —
@@ -174,9 +166,7 @@ def bpe_learn_merges(
     lexicographically (lsym, rsym) in both engines."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    tops, _ = _merge_chain(
-        _word_types(df, text_col), rounds, checkpoint_every, reliable
-    )
+    tops, _ = _merge_chain(_word_types(df, text_col), rounds, checkpoint_every)
     out_rounds = [
         top.select(
             F.lit(rnd).cast("long").alias("round"),
@@ -196,7 +186,6 @@ def bpe_learn_merges(
 def bpe_tokenize_vocab(
     df: DataFrame, text_col: str, rounds: int = 3, k: int = 20,
     checkpoint_every: int | None = None,
-    reliable: bool | str = False,
 ) -> DataFrame:
     """Apply the first `rounds` learned BPE merges back to the corpus
     and report the resulting top-k symbol vocabulary with OCCURRENCE
@@ -211,9 +200,7 @@ def bpe_tokenize_vocab(
     aggregate."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    _, merged = _merge_chain(
-        _word_types(df, text_col), rounds, checkpoint_every, reliable
-    )
+    _, merged = _merge_chain(_word_types(df, text_col), rounds, checkpoint_every)
     return (
         merged.select(F.explode("syms").alias("symbol"), "cnt")
         .groupBy("symbol")
@@ -307,7 +294,6 @@ def _sql_chain_ctes(rounds: int, toks_sql: str) -> list[str]:
 
 def bpe_compression_curve(
     df: DataFrame, text_col: str, rounds: int = 3,
-    reliable: bool | str = False,
 ) -> DataFrame:
     """The merge-count planning curve: after r = 0..rounds merges, how
     many symbol occurrences does the corpus tokenize to, and how many
@@ -323,8 +309,7 @@ def bpe_compression_curve(
     Scale notes as bpe_learn_merges — everything after the initial
     word-count aggregate runs over word TYPES.
 
-    Every chain stage is checkpointed once (eager; ``reliable`` picks
-    local vs fault-tolerant, ckpt.py): the curve
+    Every chain stage is checkpointed once (eager): the curve
     aggregates EVERY stage, so a lazy chain re-derives all ancestor
     rounds — plus the corpus word-count — once per output row
     (O(rounds²) passes; x63 was the slowest query in the whole sweep
@@ -333,12 +318,12 @@ def bpe_compression_curve(
     unchanged — checkpointing only truncates lineage."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    types = checkpoint_frame(_word_types(df, text_col), reliable)
+    types = _word_types(df, text_col).localCheckpoint(eager=True)
     chain = [types]
     t = types
     for _ in range(rounds):
         _, t = _merge_chain(t, 1)
-        t = checkpoint_frame(t, reliable)
+        t = t.localCheckpoint(eager=True)
         chain.append(t)
     out = None
     for r, t in enumerate(chain):

@@ -88,19 +88,21 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         # InferFiltersFromGenerate copies the generator's INPUT
         # expression into an inferred `size(e) > 0 AND e IS NOT NULL`
-        # filter below the Generate. Every exploded array in this
-        # workload is a COMPUTED text-pipeline expression (shingles,
-        # n-grams, token arrays) built from higher-order functions —
-        # CodegenFallback, so the duplicated tree is interpreted with
-        # no subexpression reuse and the "filter" costs 2 more full
-        # evaluations per row than the explode itself (measured 18x
-        # on the 3-gram pipeline: 29.8 s -> 1.7 s at sf0.1,
-        # artifacts/X04_DECOMP_r12.json). The rule's upside — pruning
-        # empty-array rows before a shuffle or at a parquet scan —
-        # needs STORED arrays, which no query here explodes; excluding
-        # it is scale-independent (the re-evaluation tax is per-row on
-        # any cluster) and semantics-preserving (the filter it infers
-        # only removes rows the Generate drops anyway).
+        # filter below the Generate. The text pipelines explode
+        # COMPUTED arrays (shingles, n-grams, token arrays) built from
+        # higher-order functions — CodegenFallback, so the duplicated
+        # tree is interpreted with no subexpression reuse and the
+        # "filter" costs 2 more full evaluations per row than the
+        # explode itself (measured 18x on the 3-gram pipeline: 29.8 s
+        # -> 1.7 s at sf0.1, artifacts/X04_DECOMP_r12.json). The
+        # rule's upside — pruning empty-array rows before a shuffle or
+        # at a parquet scan — needs STORED arrays. Only x36 explodes
+        # one, embeddings.embedding, which is never null or empty, so
+        # the inferred filter would remove nothing (tests/test_plans.py
+        # gates the list). Excluding the rule is scale-independent (the
+        # re-evaluation tax is per-row on any cluster) and
+        # semantics-preserving (the filter it infers only removes rows
+        # the Generate drops anyway).
         .config(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",

@@ -15,7 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windows import _events_stream, _rocksdb_state_store, _run_to_parquet_sink
+from .windows import (
+    ROCKSDB_STATE_STORE,
+    _conf_scope,
+    _events_stream,
+    _run_to_parquet_sink,
+)
 
 
 def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -28,10 +33,9 @@ def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     _run_to_parquet_sink). State runs on RocksDB: the dedup key set
     is O(input) inside the watermark horizon, and the heap-backed
     default store degraded 2.8x at 100M keys (712 s -> 252.8 s,
-    PROBE_STREAM_100M_r10.json; changelog checkpointing stays a
-    long-running-job opt-in — see _rocksdb_state_store). Returns the
-    committed result read back: one row per distinct key."""
-    with _rocksdb_state_store(spark):
+    PROBE_STREAM_100M_r10.json). Returns the committed result read
+    back: one row per distinct key."""
+    with _conf_scope(spark, ROCKSDB_STATE_STORE):
         stream = _events_stream(spark, sf_dir)
         dd = (
             stream.withWatermark("ts", "10 minutes")

@@ -21,10 +21,19 @@ exact); the plan edge converts back to TIMESTAMP_NTZ.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .windows import (
+    ROCKSDB_STATE_STORE,
+    _conf_scope,
+    _events_stream,
+    _run_to_memory_sink,
+    _run_to_parquet_sink,
+)
 
 
 STATE_SCHEMA = "n BIGINT, first_us BIGINT, last_us BIGINT"
@@ -70,8 +79,6 @@ def run_user_profile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     to completion. The final per-user profile is the row with the
     largest n_events (update mode emits one row per key per batch) —
     reduced batch-side so the result is batching-invariant."""
-    from .windows import _events_stream, _run_to_memory_sink
-
     stream = _events_stream(spark, sf_dir)
     sink = _run_to_memory_sink(user_profiles(stream), "user_profiles", mode="update")
     return (
@@ -154,7 +161,6 @@ def _activate_protobuf_shim(spark: SparkSession) -> None:
         return
     except ImportError:
         pass
-    import os
     import sys
     import tempfile
     import zipfile
@@ -320,7 +326,7 @@ class _SessionExpiryProcessor(_StatefulProcessor):
 
     State is O(1) per live user and timers are 1 per user, so at
     100 TB/day the state store holds |active users| entries, not
-    events; RocksDB + changelog checkpointing is the scale path."""
+    events; the RocksDB state store is the scale path."""
 
     def init(self, handle) -> None:
         self._handle = handle
@@ -451,8 +457,6 @@ def run_session_expiry_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     per input event on this horizon, and S12_DECOMP_r10 measured the
     memory sink's driver-side collect as about half the 10M-event
     wall and its super-linear term."""
-    import os
-
     events_path = os.path.join(sf_dir, "events.parquet")
     if not os.path.isfile(events_path):
         raise ValueError(
@@ -495,19 +499,7 @@ def _stream_state_partitions(spark: SparkSession, input_bytes: int) -> int:
     cluster-wide parallelism, while a small replay is never taxed
     32 fsyncs per batch for kilobytes of state. Deriving from data
     rather than cores also makes the bench's 8-core and 32-core runs
-    use the SAME state partitioning (comparable scaling ratios).
-    ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` overrides for deployments
-    that size state partitions explicitly (the count is fixed at the
-    first checkpoint for a production stream's lifetime — pick it for
-    the target state size, not the replay's)."""
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        n = int(env)
-        if n < 1:
-            raise ValueError(f"SPARK_GRAFT_STREAM_STATE_PARTITIONS must be >= 1, got {n}")
-        return n
+    use the SAME state partitioning (comparable scaling ratios)."""
     by_bytes = max(1, round(input_bytes / STREAM_STATE_BYTES_PER_PARTITION))
     return min(spark.sparkContext.defaultParallelism, by_bytes)
 
@@ -519,41 +511,22 @@ def _run_tws_topology(
     """Shared transformWithState drive scaffold: set the RocksDB state
     store provider (transformWithState requires it) and the
     input-derived state partition count (see _stream_state_partitions)
-    for the run's lifetime and restore them, stream events through
-    ``transform``, and return the sink contents. All tws queries (and
-    any future one) share the save/try/finally-restore discipline here
-    instead of copying it.
+    for the run's lifetime, stream events through ``transform``, and
+    return the sink contents.
 
     ``sink``: 'memory' (update-mode memory sink — right for the
     small per-key-aggregate outputs, s10/s11) or 'parquet' (the
     DISTRIBUTED file sink — required when the output is O(input)
     rows, s12's sessions; see windows._run_to_parquet_sink for the
     measured driver-collect pathology)."""
-    import os
-
-    from .windows import (
-        _events_stream,
-        _rocksdb_state_store,
-        _run_to_memory_sink,
-        _run_to_parquet_sink,
-    )
-
     input_bytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
     parts = _stream_state_partitions(spark, input_bytes)
-    conf = spark.conf
-    saved = conf.get("spark.sql.shuffle.partitions", None)
-    conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        with _rocksdb_state_store(spark):
-            stream = _events_stream(spark, sf_dir)
-            if sink == "parquet":
-                return _run_to_parquet_sink(transform(stream), prefix)
-            return _run_to_memory_sink(transform(stream), prefix, mode="update")
-    finally:
-        if saved is None:
-            conf.unset("spark.sql.shuffle.partitions")
-        else:
-            conf.set("spark.sql.shuffle.partitions", saved)
+    settings = {**ROCKSDB_STATE_STORE, "spark.sql.shuffle.partitions": str(parts)}
+    with _conf_scope(spark, settings):
+        stream = _events_stream(spark, sf_dir)
+        if sink == "parquet":
+            return _run_to_parquet_sink(transform(stream), prefix)
+        return _run_to_memory_sink(transform(stream), prefix, mode="update")
 
 
 def run_recent_top_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

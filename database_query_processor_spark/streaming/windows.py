@@ -15,6 +15,8 @@ naive timestamps.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -98,43 +100,26 @@ def _run_to_memory_sink(agg: DataFrame, prefix: str, mode: str = "complete") -> 
     return spark.table(name)
 
 
-from contextlib import contextmanager
+# RocksDB state store — the production provider for any HIGH-KEY-COUNT
+# stateful stream. Heap-backed state (the default provider) degrades
+# hard once the key set outgrows comfortable heap: s06's 100M-key
+# dedup measured 712 s on the default store vs 252.8 s on RocksDB
+# (PROBE_STREAM_100M_r10.json). Used by the tws scaffold
+# (transformWithState REQUIRES RocksDB) and the large-key
+# dropDuplicates topology.
+ROCKSDB_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    ),
+}
 
 
 @contextmanager
-def _rocksdb_state_store(spark: SparkSession, changelog: bool = False):
-    """RocksDB state store for the scope's lifetime (saved/restored
-    on exit) — the production provider for any HIGH-KEY-COUNT
-    stateful stream. Heap-backed state (the default provider)
-    degrades hard once the key set outgrows comfortable heap: s06's
-    100M-key dedup measured 712 s on the default store vs 252.8 s on
-    RocksDB (PROBE_STREAM_100M_r10.json). Used by the tws scaffold
-    (transformWithState REQUIRES RocksDB) and the large-key
-    dropDuplicates topology.
-
-    ``changelog`` additionally enables RocksDB changelog
-    checkpointing. Measured honestly, it is a LONG-RUNNING-JOB knob,
-    not a local default: per-batch commit drops from full-snapshot
-    uploads to the change set (s12 commitTimeMs sums 160s -> 14s at
-    10M events, S12_DECOMP_r10.json postfix) and wall is NEUTRAL at
-    10M (43.0 vs 42.3 s), but at 100k events the per-partition
-    per-commit changelog file overhead DOUBLES wall (A/B in-session:
-    17.5 s on vs 8.8 s off) — a short two-batch replay never earns
-    back the snapshot-avoidance. Default OFF; a real deployment with
-    hours-long lineage and state-store maintenance enabled is where
-    it pays."""
+def _conf_scope(spark: SparkSession, settings: dict[str, str]):
+    """Set ``settings`` on the session conf for the scope's lifetime;
+    on exit restore each key's previous value (or unset it)."""
     conf = spark.conf
-    settings = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-    }
-    if changelog:
-        settings[
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled"
-        ] = "true"
     saved = {k: conf.get(k, None) for k in settings}
     for k, v in settings.items():
         conf.set(k, v)

@@ -84,12 +84,17 @@ def test_stratified_sample_deterministic(spark):
 def test_train_order_is_a_permutation(spark):
     n = 500
     df = spark.range(n).select(F.col("id").alias("doc_id"))
-    rows = CP.train_order(df, "doc_id", num_partitions=8).collect()
+    out = CP.train_order(df, "doc_id", num_partitions=8)
+    rows = out.collect()
     assert sorted(r["pos"] for r in rows) == list(range(1, n + 1))
     # positions follow (shuffle_key, doc_id) order globally
     by_pos = sorted(rows, key=lambda r: r["pos"])
     keys = [(r["shuffle_key"], r["doc_id"]) for r in by_pos]
     assert keys == sorted(keys)
+    # the output is not cached: a second action re-runs the plan above
+    # the checkpointed pid stamp and must reproduce every position
+    spark.catalog.clearCache()
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, rows))
 
 
 def test_decontaminate_broadcasts_bench_side(spark):

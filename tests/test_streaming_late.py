@@ -467,3 +467,38 @@ def test_session_expiry_requires_single_file_events(spark, tmp_path):
     os.makedirs(tmp_path / "events.parquet")
     with pytest.raises(ValueError, match="SINGLE-FILE"):
         run_session_expiry_stream(spark, str(tmp_path))
+
+
+def test_stream_state_partitions_follow_input_size(spark):
+    """State partitions = input bytes / 256 KiB, rounded to nearest,
+    at least 1 and at most defaultParallelism."""
+    from database_query_processor_spark.streaming.stateful import (
+        STREAM_STATE_BYTES_PER_PARTITION as B,
+        _stream_state_partitions as parts,
+    )
+
+    cap = spark.sparkContext.defaultParallelism
+    assert B == 256 * 1024
+    assert parts(spark, 0) == 1 and parts(spark, B // 3) == 1  # floor of 1
+    assert parts(spark, int(1.4 * B)) == 1
+    assert parts(spark, int(1.6 * B)) == min(cap, 2)
+    assert parts(spark, cap * B) == cap
+    assert parts(spark, 1000 * cap * B) == cap  # capped
+
+
+def test_conf_scope_restores_session_conf(spark):
+    """_conf_scope sets its keys for the scope only: a preset key gets
+    its old value back and an unset key is unset again, also when the
+    body raises."""
+    from database_query_processor_spark.streaming.windows import _conf_scope
+
+    preset, fresh = "spark.sql.shuffle.partitions", "spark.dqps.test.fresh"
+    old = spark.conf.get(preset)
+    try:
+        with _conf_scope(spark, {preset: "3", fresh: "x"}):
+            assert spark.conf.get(preset) == "3" and spark.conf.get(fresh) == "x"
+            raise RuntimeError("body failed")
+    except RuntimeError:
+        pass
+    assert spark.conf.get(preset) == old
+    assert spark.conf.get(fresh, None) is None

@@ -109,6 +109,8 @@ def get_spark(
         )
         # events.parquet carries TIMESTAMP(NANOS) which the vectorized
         # reader rejects; read as long, catalog converts to micros.
+        # catalog.footer_schema mirrors this on the driver: it maps an
+        # INT64 timestamp[ns] footer column to long.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():

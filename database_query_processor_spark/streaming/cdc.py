@@ -187,9 +187,8 @@ def run_cdc_apply(
     changelog.repartition(log_files, F.col(key)).write.mode("overwrite").parquet(
         log_dir
     )
-    schema = spark.read.parquet(log_dir).schema
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(changelog.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(log_dir)
     )

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_query_processor_spark.catalog import load_table
+
 from .windows import _events_stream, _run_to_memory_sink, _run_to_parquet_sink
 
 
@@ -54,7 +56,7 @@ def run_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch, which is what makes the final table equal the batch
     rollup)."""
     stream = _events_stream(spark, sf_dir)
-    dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
     )
     enriched = stream.join(

@@ -50,8 +50,8 @@ def run_foreach_batch_sink(spark: SparkSession, sf_dir: str, out_dir: str | None
     finally:
         q.stop()
     return (
-        spark.read.option("basePath", out)
-        .parquet(f"{out}/epoch=*")
+        spark.read.schema("event_type string, n bigint")
+        .parquet(out)
         .groupBy("event_type")
         .agg(F.sum("n").alias("n"))
     )

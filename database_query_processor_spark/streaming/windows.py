@@ -20,6 +20,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_query_processor_spark.catalog import footer_schema
+
 from . import normalize_event_ts
 
 def tumbling_counts(events: DataFrame, size: str = "1 hour") -> DataFrame:
@@ -61,7 +63,7 @@ def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source readStream over events.parquet (the same topology
     that would read Kafka at scale)."""
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = footer_schema(f"{sf_dir}/events.parquet")
     # the file stream source wants a directory: glob-filter to events
     stream = (
         spark.readStream.schema(raw_schema)

@@ -42,7 +42,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--data-dir", default=DEFAULT_SF_DIR, help="parquet table directory")
     ap.add_argument("--dialect", choices=("reference", "spark"), default="reference")
     ap.add_argument("--explain", action="store_true", help="print the physical plan")
-    ap.add_argument("--single-file", action="store_true", help="coalesce to one output file")
+    ap.add_argument("--single-file", action="store_true",
+                    help="write one result file from the driver; the result must fit in "
+                         "spark.driver.maxResultSize (default 1g) or the query fails "
+                         "before RESULT_DIR is touched")
     ap.add_argument("--confirm", action="store_true",
                     help="reference-compat: show the plan and ask before executing "
                          "(QueryMain's confirm-before-execute prompt, "

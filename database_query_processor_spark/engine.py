@@ -54,7 +54,13 @@ class Engine:
     def execute_to_file(
         self, query: str, path: str, dialect: str = "spark", single_file: bool = True
     ) -> None:
-        """QueryMain shape: query string → tab-delimited result file."""
+        """QueryMain shape: query string → tab-delimited result file.
+
+        With ``single_file=True`` (the default) the result is collected
+        to the driver and written there as one file, so it must fit in
+        ``spark.driver.maxResultSize`` (Spark's default is 1g). A larger
+        result fails loudly before ``path`` is touched; write it with
+        ``single_file=False`` (one file per partition, in parallel)."""
         df = self.reference_sql(query) if dialect == "reference" else self.sql(query)
         write_result(df, path, single_file=single_file)
 

@@ -3,9 +3,16 @@ tab-delimited result out."""
 
 from __future__ import annotations
 
+import os
+
 from database_query_processor_spark.cli import main
 
 SF = "/root/testdata/sf0.001"
+
+
+def _assert_one_result_file(out) -> None:
+    """--single-file leaves exactly one part file plus the _SUCCESS marker."""
+    assert sorted(os.listdir(out)) == ["_SUCCESS", "part-00000.csv"]
 
 
 def test_cli_reference_dialect(spark, tmp_path):
@@ -18,6 +25,7 @@ def test_cli_reference_dialect(spark, tmp_path):
     out = tmp_path / "result"
     rc = main([str(q), str(out), "--data-dir", SF, "--single-file"])
     assert rc == 0
+    _assert_one_result_file(out)
     lines = spark.sparkContext.textFile(str(out)).collect()
     assert lines[0] == "l_orderkey\tl_quantity"
     assert len(lines) > 1
@@ -33,6 +41,7 @@ def test_cli_spark_dialect(spark, tmp_path):
     out = tmp_path / "result"
     rc = main([str(q), str(out), "--data-dir", SF, "--dialect", "spark", "--single-file"])
     assert rc == 0
+    _assert_one_result_file(out)
     lines = spark.sparkContext.textFile(str(out)).collect()
     assert lines[0] == "n" and int(lines[1]) > 0
 
@@ -53,6 +62,7 @@ def test_cli_reference_positional_knobs(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
     assert rc == 0
+    _assert_one_result_file(out)
     lines = spark.sparkContext.textFile(str(out)).collect()
     assert lines[0] == "l_orderkey"
     assert len(lines) > 1
@@ -74,5 +84,6 @@ def test_cli_confirm_gate(spark, tmp_path, monkeypatch, capsys):
     monkeypatch.setattr("builtins.input", lambda *_: "y")
     rc = main([str(q), str(out), "--data-dir", SF, "--confirm", "--single-file"])
     assert rc == 0
+    _assert_one_result_file(out)
     lines = spark.sparkContext.textFile(str(out)).collect()
     assert lines[0] == "r_name" and len(lines) == 6

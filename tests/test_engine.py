@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from database_query_processor_spark.engine import Engine
 
 SF = "/root/testdata/sf0.001"
@@ -19,6 +21,7 @@ def test_engine_surface(spark, tmp_path):
 
     out = str(tmp_path / "res")
     eng.execute_to_file("SELECT * FROM region", out)
+    assert sorted(os.listdir(out)) == ["_SUCCESS", "part-00000.csv"]
     lines = spark.sparkContext.textFile(out).collect()
     assert len(lines) == 6  # header + 5 regions
 

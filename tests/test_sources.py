@@ -10,9 +10,29 @@ output (src/QueryMain.java:162-226).
 
 from __future__ import annotations
 
+import datetime
+import importlib.util
+import random
+import sys
+import uuid
+from decimal import Decimal
+from pathlib import Path
+
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
-from pyspark.sql.types import FloatType, IntegerType, StringType
+from pyspark.sql.types import (
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from database_query_processor_spark.sources import (
     generate_table,
@@ -21,6 +41,9 @@ from database_query_processor_spark.sources import (
     table_stats,
     write_result,
 )
+from database_query_processor_spark.sources.sink import NULL_TOKEN
+
+REPO = Path(__file__).resolve().parent.parent
 
 # Our own spec, in the reference's .det layout (format:
 # src/RandomDB.java:41-111; cf. testcases/CUSTOMER.det shape).
@@ -111,6 +134,171 @@ def test_result_sink_format(spark, tmp_path):
     )
     assert "k\tv" in lines  # header row
     assert "2\t-NULL-" in lines  # reference null token (QueryMain.java:219-220)
+
+
+# --- single-file results: byte-identical to Spark's csv writer ----------
+
+
+def _single_file_bytes(df, path: Path) -> bytes:
+    write_result(df, str(path), single_file=True)
+    assert sorted(p.name for p in path.iterdir()) == ["_SUCCESS", "part-00000.csv"]
+    return (path / "part-00000.csv").read_bytes()
+
+
+def _csv_writer_bytes(df, path: Path) -> bytes:
+    """The oracle: Spark's csv writer on one partition, same options."""
+    (df.coalesce(1).write.option("sep", "\t").option("header", "true")
+     .option("nullValue", NULL_TOKEN).csv(str(path)))
+    [part] = path.glob("part-*.csv")
+    return part.read_bytes()
+
+
+def _assert_same_as_csv_writer(df, tmp_path: Path) -> bytes:
+    got = _single_file_bytes(df, tmp_path / "single")
+    assert got == _csv_writer_bytes(df, tmp_path / "oracle")
+    return got
+
+
+def test_single_file_awkward_values_byte_identical(spark, tmp_path):
+    schema = StructType([
+        StructField("tab\tname", StringType()),
+        StructField('quote"name', StringType()),
+        StructField("new\nline name", StringType()),
+        StructField("back\\slash", StringType()),
+        StructField(" lead", StringType()),
+        StructField("dbl", DoubleType()),
+        StructField("flt", FloatType()),
+        StructField("dec", DecimalType(12, 2)),
+        StructField("d", DateType()),
+        StructField("ts", TimestampType()),
+        StructField("ts_ntz", TimestampNTZType()),
+        StructField("dot.ted", StringType()),
+        StructField("dot.ted", IntegerType()),  # the writer allows a repeated name
+    ])
+    rows = [
+        ("a\tb", 'say "hi"', "two\nlines", "C:\\dir", " lead", float("nan"), -0.0,
+         Decimal("1.50"), datetime.date(2020, 1, 2),
+         datetime.datetime(2020, 1, 2, 3, 4, 5, 123000), datetime.datetime(2020, 1, 2, 3, 4, 5),
+         "x.y", 1),
+        ("", None, "\\", '"', "trail ", float("inf"), 1e20, None, None, None, None, None, None),
+        (None, "", "cr\r\nlf", "x\\", "", 1e20, float("-inf"), Decimal("-0.01"),
+         datetime.date(1970, 1, 1), datetime.datetime(1999, 12, 31, 23, 59, 59),
+         datetime.datetime(1, 1, 1), "", -1),
+        (" ", "-NULL-", None, None, None, -0.0, float("nan"), Decimal("0"), None, None, None,
+         "a\tb", 0),
+    ]
+    got = _assert_same_as_csv_writer(spark.createDataFrame(rows, schema), tmp_path)
+    assert got.startswith(b'"tab\tname"\t')  # awkward names reach the header quoted
+
+
+def test_single_file_empty_result_is_header_only(spark, tmp_path):
+    df = spark.range(10).selectExpr("id AS k", "CAST(id AS STRING) AS v").filter("k < 0")
+    assert _assert_same_as_csv_writer(df, tmp_path) == b"k\tv\n"
+
+
+def test_single_file_keeps_multi_partition_order_by(spark, tmp_path):
+    conf = {"spark.sql.shuffle.partitions": "4",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    before = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        df = (spark.range(0, 4000, numPartitions=4)
+              .select(((F.col("id") * 7919) % 4001).alias("k"), F.col("id"))
+              .orderBy(F.col("k").desc()))
+        assert df.select(F.spark_partition_id()).distinct().count() > 1
+        got = _assert_same_as_csv_writer(df, tmp_path)
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    keys = [int(line.split(b"\t")[0]) for line in got.splitlines()[1:]]
+    assert len(keys) == 4000 and keys == sorted(keys, reverse=True)
+
+
+def _adhoc_queries():
+    """perfbench's adhoc templates, one query each (seed 1), read from
+    the benchmark's workload module by path."""
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_workloads", REPO / "perfbench" / "workloads.py")
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = mod  # its dataclasses resolve through sys.modules
+    spec.loader.exec_module(mod)
+    return mod.adhoc_queries(random.Random("adhoc:1"))
+
+
+def test_single_file_adhoc_templates_byte_identical(spark, tmp_path):
+    from database_query_processor_spark.engine import Engine
+
+    eng = Engine(str(REPO / "perfbench" / "data" / "sf0.001"), spark=spark)
+    queries = _adhoc_queries()
+    assert len(queries) == 10
+    for q in queries:
+        _assert_same_as_csv_writer(q.build(eng), tmp_path / q.qid)
+
+
+# --- single-file results: loud failures ----------------------------------
+
+
+def _tree(path: Path) -> dict[str, bytes]:
+    return {str(p.relative_to(path)): p.read_bytes() for p in path.rglob("*") if p.is_file()}
+
+
+@pytest.mark.parametrize("expr", ["array(1, 2)", "map('k', 1)", "named_struct('a', 1)", "NULL"])
+def test_single_file_rejects_unwritable_column_before_any_job(spark, tmp_path, expr):
+    out = tmp_path / "result"
+    write_result(spark.range(3), str(out), single_file=True)
+    before = _tree(out)
+    df = spark.range(3).selectExpr("id", f"{expr} AS bad_col")
+    sc = spark.sparkContext
+    group = f"sink-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "unwritable column")
+    try:
+        with pytest.raises(AnalysisException, match="UNSUPPORTED_DATA_TYPE_FOR_DATASOURCE.*bad_col"):
+            write_result(df, str(out), single_file=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _tree(out) == before
+
+
+def test_single_file_rejects_frame_without_columns(spark, tmp_path):
+    out = tmp_path / "result"
+    with pytest.raises(AnalysisException, match="EMPTY_SCHEMA_NOT_SUPPORTED_FOR_DATASOURCE"):
+        write_result(spark.range(3).select(), str(out), single_file=True)
+    assert not out.exists()
+
+
+def test_single_file_runtime_failure_keeps_previous_result(spark, tmp_path):
+    out = tmp_path / "result"
+    write_result(spark.range(5), str(out), single_file=True)
+    before = _tree(out)
+    bad = spark.range(10).select((F.lit(1) / (F.col("id") - F.col("id"))).alias("x"))
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        write_result(bad, str(out), single_file=True)
+    assert _tree(out) == before
+    assert [p.name for p in tmp_path.iterdir()] == ["result"]  # no temp sibling left
+
+
+def test_single_file_replaces_existing_directory_or_file(spark, tmp_path):
+    out = tmp_path / "result"
+    (out / "nested").mkdir(parents=True)
+    (out / "part-00001-old.csv").write_text("stale\n")
+    (out / "nested" / "x").write_text("x")
+    assert _single_file_bytes(spark.range(2), out) == b"id\n0\n1\n"
+    out_file = tmp_path / "plain_file"
+    out_file.write_text("stale\n")
+    assert _single_file_bytes(spark.range(1), out_file) == b"id\n0\n"
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["plain_file", "result"]
+
+
+def test_single_file_paths(spark, tmp_path):
+    out = tmp_path / "via_uri"
+    write_result(spark.range(1), out.as_uri(), single_file=True)
+    assert (out / "part-00000.csv").read_bytes() == b"id\n0\n"
+    for path in ("hdfs://namenode/results/q1", "s3a://bucket/q1"):
+        with pytest.raises(ValueError, match="single_file=False"):
+            write_result(spark.range(1), path, single_file=True)
 
 
 def test_table_stats(spark, spec):

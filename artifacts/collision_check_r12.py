@@ -10,18 +10,23 @@ asserts exactly that at every test SF:
 
 over the documents table's word-3-gram shingle universe (minhash /
 jaccard / containment) AND the 8-gram universe (x55 substring-dedup's
-hashed window key). Run:
+hashed window key). Prints the counts as JSON (the record is
+COLLISION_CHECK_r12.json); exits non-zero on a collision. Run on the
+three test scales, or on any dataset dirs (e.g. gen_scale.py output):
 
-    PYTHONPATH=/root/repo python artifacts/collision_check_r12.py
+    python artifacts/collision_check_r12.py [DIR ...]
 """
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# Python UDF workers import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -35,13 +40,16 @@ SF_DIRS = [
 ]
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description="xxhash64 injectivity on shingles")
+    ap.add_argument("dirs", nargs="*", default=SF_DIRS)
+    args = ap.parse_args(argv)
     spark = get_spark(
         app_name="collision-check-r12",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     out = {}
-    for sf_dir in SF_DIRS:
+    for sf_dir in args.dirs:
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         for n in (3, 8):
             grams = (
@@ -56,8 +64,7 @@ def main() -> None:
             out[key] = {"distinct_grams": row["n_grams"], "distinct_hashes": row["n_hashes"]}
             assert row["n_grams"] == row["n_hashes"], f"collision at {key}: {out[key]}"
             print(f"{key}: {row['n_grams']} distinct grams == {row['n_hashes']} hashes OK")
-    with open(os.path.join(REPO, "artifacts", "COLLISION_CHECK_r12.json"), "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
+    print(json.dumps(out, indent=1, sort_keys=True))
     spark.stop()
 
 

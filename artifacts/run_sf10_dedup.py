@@ -1,14 +1,8 @@
 #!/usr/bin/env python
-"""Round-8 fourth-decade correctness spot-check (VERDICT r7 item 8):
-the five dedup pair-space rows at sf10 (500k docs, /tmp/dqps_sf10,
-artifacts/gen_sf10.py), each against the strongest check that is
-actually FEASIBLE at this scale — named per row in the artifact:
+"""Scaled-data correctness checks for the two dedup pair-space rows
+whose check sweep.py cannot express, run on artifacts/gen_scale.py
+output:
 
-  * x04 / x60 / x62(sampled %9700): the REAL DuckDB oracle via the
-    in-engine order-insensitive hash compare (tests/oracle.py
-    hashed_compare — only two scalars cross the harness boundary).
-    These oracles are df-capped / query-sliced, so they stay
-    polynomial at 500k docs; DUCKDB_MEMLIMIT guards the box.
   * x02: the quadratic exact-Jaccard DuckDB oracle is infeasible at
     500k docs, so the check is an INDEPENDENT in-engine mechanism:
     the uncapped inverted-index exact-Jaccard pair set
@@ -19,103 +13,74 @@ actually FEASIBLE at this scale — named per row in the artifact:
     same shared/(na+nb-shared) IEEE divide). LSH-vs-inverted-index is
     a genuinely different pair-generation mechanism, so agreement is
     evidence, not tautology.
-  * x55: exact copy-isomorphism PASS rows — gen_sf10 guarantees zero
-    all-exempt 8-grams, so the sf10 k-gram universe is copy-pure and
-    the sf10 result must be EXACTLY 10 id-shifted images of the sf1
-    result (which the r7/r8 sweeps verified against DuckDB at sf1).
-    Checked per copy with exceptAll in both directions.
+  * x55: exact copy-isomorphism PASS rows — gen_scale guarantees zero
+    all-exempt 8-grams, so the k-gram universe is copy-pure and the
+    result on --scaled must be EXACTLY `copies` id-shifted images of
+    the result on --ref (which the sweep verifies against DuckDB).
+    `copies` is the scaled/ref documents row ratio and the id span
+    is ref's max doc_id + 1, both read from the data. Checked per
+    copy with exceptAll in both directions.
 
-APPENDS rows to artifacts/SWEEP_SF10_DEDUP_r08.txt. Run ONE SECTION
-PER PROCESS (SF10_SECTIONS=x04 / x60 / x62 / x02 / x55): at 500k docs
-the long-lived Spark context's shuffle files plus the DuckDB oracle's
-spill overran this box's 80 GB free disk when sections shared a
-process.
-Usage: SF10_SECTIONS=x62 PYTHONPATH=/root/repo python -u artifacts/run_sf10_dedup.py
+The other sf10 dedup rows are plain oracle compares:
+  SWEEP_SF_DIR=/tmp/dqps_sf10 SWEEP_HASHED=x04,x60 python sweep.py x04 x60
+  python artifacts/run_sf1_x_specials.py --scaled /tmp/dqps_sf10 --sections x62
+
+Run ONE SECTION PER PROCESS at 500k docs: a long-lived Spark
+context's shuffle files (its ContextCleaner only drops them on driver
+GC) accumulate next to the DuckDB spill. Prints one row per check;
+exits 1 on any failure. Usage:
+  python -u artifacts/run_sf10_dedup.py [--ref /tmp/dqps_sf1] \\
+      [--scaled /tmp/dqps_sf10] [--sections x02,x55]
 """
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
 
-os.environ.setdefault("DUCKDB_MEMLIMIT", "48GB")
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Python UDF workers import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from database_query_processor_spark.catalog import load_table  # noqa: E402
 from database_query_processor_spark.session import get_spark  # noqa: E402
-from database_query_processor_spark.workload import all_specs  # noqa: E402
-from tests.oracle import hashed_compare  # noqa: E402
 
 SF1 = "/tmp/dqps_sf1"
 SF10 = "/tmp/dqps_sf10"
-SPAN = 50_000  # sf1 doc_id span (asserted by gen_sf10's output print)
-COPIES = 10
-OUT = os.path.join(os.path.dirname(__file__), "SWEEP_SF10_DEDUP_r08.txt")
-# SF10_SECTIONS: comma list of section prefixes (x04,x60,x62,x02,x55)
-# to run IN THIS PROCESS; rows append to OUT. At 500k docs a single
-# process accumulates Spark shuffle files (the long-lived context's
-# ContextCleaner only drops them on driver GC) NEXT TO the DuckDB
-# oracle's own spill — running x04+x60 then x62's oracle in one
-# process overran this box's 80 GB free disk. One section per process
-# keeps peak scratch = that section's own.
-SECTIONS = {
-    p for p in os.environ.get("SF10_SECTIONS", "x04,x60,x62,x02,x55").split(",") if p
-}
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description="x02/x55 checks at scale")
+    ap.add_argument("--ref", default=SF1, help="a smaller gen_scale output (or its base)")
+    ap.add_argument("--scaled", default=SF10, help="a larger gen_scale output")
+    ap.add_argument("--sections", default="x02,x55")
+    ap.add_argument("--driver-memory", default="64g")
+    args = ap.parse_args(argv)
+    sections = set(args.sections.split(","))
+
     spark = get_spark(
-        app_name="sf10-dedup", driver_memory="64g",
+        app_name="sf10-dedup", driver_memory=args.driver_memory,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    specs = {s.name: s for s in all_specs()}
-    lines: list[str] = []
     ok = True
 
     def emit(t0, name, probs, tag):
         nonlocal ok
-        line = (
+        print(
             f"{time.time() - t0:8.2f}s {name} "
-            + (tag if not probs else "MISMATCH: " + "; ".join(str(p) for p in probs))
+            + (tag if not probs else "MISMATCH: " + "; ".join(str(p) for p in probs)),
+            flush=True,
         )
-        print(line, flush=True)
-        lines.append(line)
         ok &= not probs
 
-    # --- x04 / x60: real DuckDB oracle, hashed compare ---
-    for name in ("x04_dedup_ngram_jaccard", "x60_dedup_containment"):
-        if name[:3] not in SECTIONS:
-            continue
-        spec = specs[name]
-        spark.catalog.clearCache()
-        t0 = time.time()
-        probs = hashed_compare(spec.build(spark, SF10), spec.oracle, SF10)
-        emit(t0, name, probs, "MATCH-HASHED")
-
-    d10 = load_table(spark, SF10, "documents")
-
-    # --- x62 sampled slice (%9700 -> ~52 queries at 500k docs) ---
-    if "x62" in SECTIONS:
-        from database_query_processor_spark.operators import retrieval as RT
-        from database_query_processor_spark.workload.extensions import _hardneg_oracle
-
-        spark.catalog.clearCache()
-        t0 = time.time()
-        sampled = _hardneg_oracle().replace("% 97 = 0", "% 9700 = 0")
-        assert sampled.count("% 9700 = 0") == 2
-        df62 = RT.bm25_hard_negatives(
-            d10, "doc_id", "text", F.col("doc_id") % 9700 == 0, k=3
-        )
-        n62 = df62.count()
-        probs = hashed_compare(df62, sampled, SF10) + (
-            [] if n62 > 0 else ["vacuous: 0 rows"]
-        )
-        emit(t0, f"x62_hard_negatives[sampled-9700, {n62} rows]", probs, "MATCH-HASHED")
+    d10 = load_table(spark, args.scaled, "documents")
 
     # --- x02: LSH output == independent exact inverted-index Jaccard ---
-    if "x02" in SECTIONS:
+    if "x02" in sections:
         from database_query_processor_spark.operators.dedup import (
             minhash_dedup_pairs,
             ngram_jaccard_pairs,
@@ -138,38 +103,40 @@ def main() -> int:
         emit(t0, f"x02_dedup_minhash[vs exact inverted-index, {n_lsh} pairs]", probs,
              "PASS-EXACT-ALT-MECHANISM")
 
-    # --- x55: exact copy-isomorphism vs the sf1 (DuckDB-verified) result ---
-    if "x55" in SECTIONS:
+    # --- x55: exact copy-isomorphism vs the ref (DuckDB-verified) result ---
+    if "x55" in sections:
         from database_query_processor_spark.operators.dedup import substring_dup_spans
 
         spark.catalog.clearCache()
         t0 = time.time()
-        d1 = load_table(spark, SF1, "documents")
+        d1 = load_table(spark, args.ref, "documents")
+        n_docs = d1.count()
+        copies, rest = divmod(d10.count(), n_docs)
+        span = int(d1.agg(F.max("doc_id")).first()[0]) + 1
+        if rest:
+            raise SystemExit(f"{args.scaled} is not a whole multiple of {args.ref}")
         ref = substring_dup_spans(d1, "doc_id", "text").persist()
         n_ref = ref.count()
         got = (
             substring_dup_spans(d10, "doc_id", "text")
-            .withColumn("_copy", (F.col("doc_id") / SPAN).cast("long"))
-            .withColumn("doc_id", F.col("doc_id") % SPAN)
+            .withColumn("_copy", (F.col("doc_id") / span).cast("long"))
+            .withColumn("doc_id", F.col("doc_id") % span)
             .persist()
         )
         n_got = got.count()
         probs = []
         if n_ref == 0:
-            probs.append("vacuous: sf1 reference empty")
-        if n_got != COPIES * n_ref:
-            probs.append(f"count: {n_got} != {COPIES} * {n_ref}")
-        for j in range(COPIES):
+            probs.append("vacuous: ref result empty")
+        if n_got != copies * n_ref:
+            probs.append(f"count: {n_got} != {copies} * {n_ref}")
+        for j in range(copies):
             cj = got.filter(F.col("_copy") == j).drop("_copy")
             diff = cj.exceptAll(ref).count() + ref.exceptAll(cj).count()
             if diff:
-                probs.append(f"copy {j}: {diff} row diffs vs sf1")
-        emit(t0, f"x55_substring_dedup[copy-isomorphism x{COPIES}, {n_got} rows]",
+                probs.append(f"copy {j}: {diff} row diffs vs ref")
+        emit(t0, f"x55_substring_dedup[copy-isomorphism x{copies}, {n_got} rows]",
              probs, "PASS-EXACT-INVARIANT")
 
-    with open(OUT, "a") as fh:
-        fh.write("\n".join(lines) + "\n")
-    print("appended", OUT, flush=True)
     return 0 if ok else 1
 
 

@@ -1,129 +1,78 @@
 #!/usr/bin/env python
-"""Round-9 fourth-decade correctness spot-check for the TEXT-ANALYSIS
-/ RETRIEVAL family: six representative rows at sf10 (500k docs,
-/tmp/dqps_sf10, artifacts/gen_sf10.py), each against its REAL DuckDB
-oracle via the in-engine order-insensitive hash compare
-(tests/oracle.py hashed_compare — only two scalars cross the harness
-boundary). This family was previously verified at sf0.01 (driver) and
-sf1 (SWEEP_SF1_XFAMILY_r07/r08); sf10 is its third decade, mirroring
-what r8 did for the dedup pair-space rows and the r9 relational
-sweep did for TPC-H.
+"""Scaled-data check of x50_bigram_lm_quality in its SAMPLED-SLICE
+form, which sweep.py cannot express, run on artifacts/gen_scale.py
+output (500k docs at /tmp/dqps_sf10), against its real DuckDB oracle
+via the in-engine order-insensitive hash compare (tests/oracle.py
+hashed_compare — only two scalars cross the harness boundary).
 
-Rows (heaviest / most shuffle-shaped text rows, per the sf1 sweep):
-  x40_bm25_search          — filtered (doc,term) shuffle + broadcast stats
-  x26_tfidf_terms          — full (doc,term) df join + per-doc top-k
-  x41_unigram_lm_quality   — corpus-trained vocab broadcast, NLL fold
-  x50_bigram_lm_quality    — interpolated n-gram ladder (slowest sf1 row)
-  x54_corpus_profile       — per-lang rollup + exact percentiles
-  x57_nb_quality_classifier — hash-split train/apply naive Bayes
+x50's FULL oracle materializes every (doc,pos,prev,cur) row and
+list-aggregates all of them per doc — ~80 GB peak / 890 s at 500k
+docs (SWEEP_SF10_TEXT_r09.txt). The re-runnable form is the SAMPLED
+SLICE (sql_bigram_logprob sample_mod=10, the x62 %-slice precedent):
+corpus stats from every doc, per-position relation + ordered fold
+over doc_id % 10 = 0 (50k docs at sf10); the engine frame is
+filtered identically. Slice == full-form-filtered is pinned at sf0.01
+by test_bigram_oracle_sampled_slice_parity.
 
-All six oracles are df/vocab-bounded (no pair space), so they stay
-near-linear at 500k docs; DUCKDB_MEMLIMIT guards the box. One section
-per process (SF10T_SECTIONS=x40 / x26 / x41 / x50 / x54 / x57) for
-the same scratch-disk reason as run_sf10_dedup.py.
+The other sf10 text rows are plain oracle compares:
+  SWEEP_SF_DIR=/tmp/dqps_sf10 SWEEP_HASHED=x40,x26,x41,x54,x57 \\
+      python sweep.py x40 x26 x41 x54 x57
 
-APPENDS rows to artifacts/SWEEP_SF10_TEXT_r10.txt. Round-10 changes:
-x50 runs in its re-runnable SAMPLED-SLICE form (see X50_SAMPLE_MOD),
-and duck_connect now gives memory-limited oracles a bounded spill
-directory, so the 48GB limit spills instead of OOM-erroring.
-Usage: SF10T_SECTIONS=x40 PYTHONPATH=/root/repo python -u artifacts/run_sf10_text.py
+x50's oracle needs ~80 GB peak at 500k docs and the JVM never returns
+heap to the OS once the Spark side has run, so start with a small
+driver (24g fits the Spark side). Prints one row; exits 1 on a
+MISMATCH. Usage:
+  python -u artifacts/run_sf10_text.py [--data /tmp/dqps_sf10] [--driver-memory 24g]
 """
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
 
 os.environ.setdefault("DUCKDB_MEMLIMIT", "48GB")
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Python UDF workers import the package too
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 from database_query_processor_spark.session import get_spark  # noqa: E402
 from database_query_processor_spark.workload import all_specs  # noqa: E402
 from tests.oracle import hashed_compare  # noqa: E402
 
 SF10 = "/tmp/dqps_sf10"
-OUT = os.path.join(os.path.dirname(__file__), "SWEEP_SF10_TEXT_r10.txt")
-ROWS = [
-    "x40_bm25_search",
-    "x26_tfidf_terms",
-    "x41_unigram_lm_quality",
-    "x50_bigram_lm_quality",
-    "x54_corpus_profile",
-    "x57_nb_quality_classifier",
-]
-
-# x50's FULL oracle materializes every (doc,pos,prev,cur) row and
-# list-aggregates all of them per doc — ~80 GB peak / 890 s at 500k
-# docs, and it OOM-crashed twice under DUCKDB_MEMLIMIT=48GB before
-# duck_connect had a spill path (SWEEP_SF10_TEXT_r09.txt). The r10
-# re-runnable form is the SAMPLED SLICE (sql_bigram_logprob
-# sample_mod=10, the x62 %-slice precedent): corpus stats from every
-# doc, per-position relation + ordered fold over doc_id % 10 = 0
-# (50k docs at sf10); the engine frame is filtered identically.
-# Slice == full-form-filtered is pinned at sf0.01 by
-# test_bigram_oracle_sampled_slice_parity.
 X50_SAMPLE_MOD = 10
-SECTIONS = {
-    p
-    for p in os.environ.get(
-        "SF10T_SECTIONS", "x40,x26,x41,x50,x54,x57"
-    ).split(",")
-    if p
-}
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
+    from database_query_processor_spark.operators.retrieval import sql_bigram_logprob
+    from database_query_processor_spark.workload.extensions import TOKS_SQL
+
+    ap = argparse.ArgumentParser(description="x50 sampled slice at scale")
+    ap.add_argument("--data", default=SF10, help="gen_scale --dst")
+    ap.add_argument("--driver-memory", default="64g")
+    args = ap.parse_args(argv)
     spark = get_spark(
-        # SF10T_DRIVER_MEM: x50's DuckDB oracle needs ~80 GB peak at
-        # 500k docs (bg materialization + the 4-way join); the JVM
-        # never returns heap to the OS once the Spark side has run, so
-        # that section must start with a small driver (24g fits its
-        # Spark side comfortably) or the oracle hits std::bad_alloc at
-        # the system level (two such rows are kept in the artifact).
-        app_name="sf10-text",
-        driver_memory=os.environ.get("SF10T_DRIVER_MEM", "64g"),
+        app_name="sf10-text", driver_memory=args.driver_memory,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    specs = {s.name: s for s in all_specs()}
-    lines: list[str] = []
-    ok = True
-
-    for name in ROWS:
-        if name[:3] not in SECTIONS:
-            continue
-        spec = specs[name]
-        spark.catalog.clearCache()
-        frame, oracle, suffix = spec.build(spark, SF10), spec.oracle, ""
-        if name == "x50_bigram_lm_quality":
-            from database_query_processor_spark.operators.retrieval import (
-                sql_bigram_logprob,
-            )
-            from database_query_processor_spark.workload.extensions import TOKS_SQL
-
-            frame = frame.filter(f"doc_id % {X50_SAMPLE_MOD} = 0")
-            oracle = sql_bigram_logprob(
-                toks_sql=TOKS_SQL, sample_mod=X50_SAMPLE_MOD
-            )
-            suffix = f"[sampled-{X50_SAMPLE_MOD}]"
-        t0 = time.time()
-        try:
-            probs = hashed_compare(frame, oracle, SF10)
-        except Exception as ex:  # an oracle OOM-kill must leave a row behind
-            probs = [f"ERROR {type(ex).__name__}: {ex}"]
-        line = (
-            f"{time.time() - t0:8.2f}s {name}{suffix} "
-            + ("MATCH-HASHED" if not probs else
-               "MISMATCH: " + "; ".join(str(p) for p in probs))
-        )
-        print(line, flush=True)
-        lines.append(line)
-        ok &= not probs
-
-    if lines:
-        with open(OUT, "a") as fh:
-            fh.write("\n".join(lines) + "\n")
-        print("appended", OUT, flush=True)
-    return 0 if ok else 1
+    name = "x50_bigram_lm_quality"
+    spec = next(s for s in all_specs() if s.name == name)
+    frame = spec.build(spark, args.data).filter(f"doc_id % {X50_SAMPLE_MOD} = 0")
+    oracle = sql_bigram_logprob(toks_sql=TOKS_SQL, sample_mod=X50_SAMPLE_MOD)
+    t0 = time.time()
+    try:
+        probs = hashed_compare(frame, oracle, args.data)
+    except Exception as ex:  # an oracle OOM-kill must leave a row behind
+        probs = [f"ERROR {type(ex).__name__}: {ex}"]
+    print(
+        f"{time.time() - t0:8.2f}s {name}[sampled-{X50_SAMPLE_MOD}] "
+        + ("MATCH-HASHED" if not probs else
+           "MISMATCH: " + "; ".join(str(p) for p in probs)),
+        flush=True,
+    )
+    return 0 if not probs else 1
 
 
 if __name__ == "__main__":

@@ -26,11 +26,8 @@ collect():
      ["aa","a"]).
 
 Rounds chain by building round r's types frame from round r-1's; the
-demo keeps the whole learner one lazy DAG (each extra round
-re-derives its ancestors, O(rounds²) over the types table). At
-production round counts pass `checkpoint_every=k`: the chain
-checkpoints the types frame every k rounds, bounding every plan's
-lineage at k and making total work O(rounds·k).
+whole learner stays one lazy DAG (each extra round re-derives its
+ancestors, O(rounds²) over the types table).
 
 The DuckDB oracle (sql_bpe_merges) reproduces the merge bit-for-bit
 with a different mechanism — position explode + run-parity windows
@@ -110,22 +107,13 @@ def _word_types(df: DataFrame, text_col: str) -> DataFrame:
 
 
 def _merge_chain(
-    types: DataFrame, rounds: int, checkpoint_every: int | None = None,
+    types: DataFrame, rounds: int
 ) -> tuple[list[DataFrame], DataFrame]:
     """Run `rounds` learn+apply BPE rounds over the types frame.
     Returns (per-round 1-row winner frames, the fully-merged types
-    frame).
-
-    `checkpoint_every=k` localCheckpoints the types frame every k
-    rounds, truncating lineage so no round's plan (winner frames
-    included) re-derives more than k ancestors: total work drops from
-    O(rounds²) re-derivation to O(rounds·k) plus rounds/k bounded
-    materializations of the Zipf-bounded types table — the knob a
-    production 30k-merge vocabulary run needs. None (the demo
-    default) keeps the whole learner one lazy DAG; checkpointing
-    never changes values, only lineage."""
+    frame)."""
     tops = []
-    for rnd in range(rounds):
+    for _ in range(rounds):
         pairs = (
             types.select("cnt", F.explode(_adjacent_pairs(F.col("syms"))).alias("p"))
             .groupBy(F.col("p.l").alias("lsym"), F.col("p.r").alias("rsym"))
@@ -147,26 +135,17 @@ def _merge_chain(
             "cnt",
             _merge_pair(F.col("syms"), F.col("lsym"), F.col("rsym")).alias("syms"),
         )
-        if (
-            checkpoint_every
-            and (rnd + 1) % checkpoint_every == 0
-            and rnd + 1 < rounds
-        ):
-            types = types.localCheckpoint(eager=True)
     return tops, types
 
 
-def bpe_learn_merges(
-    df: DataFrame, text_col: str, rounds: int = 3,
-    checkpoint_every: int | None = None,
-) -> DataFrame:
+def bpe_learn_merges(df: DataFrame, text_col: str, rounds: int = 3) -> DataFrame:
     """Learn the first `rounds` BPE merges from the corpus. Returns
     one row per round: (round, lsym, rsym, merged, pair_count) —
     the merge table a tokenizer ships. Ties on pair_count break
     lexicographically (lsym, rsym) in both engines."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    tops, _ = _merge_chain(_word_types(df, text_col), rounds, checkpoint_every)
+    tops, _ = _merge_chain(_word_types(df, text_col), rounds)
     out_rounds = [
         top.select(
             F.lit(rnd).cast("long").alias("round"),
@@ -184,8 +163,7 @@ def bpe_learn_merges(
 
 
 def bpe_tokenize_vocab(
-    df: DataFrame, text_col: str, rounds: int = 3, k: int = 20,
-    checkpoint_every: int | None = None,
+    df: DataFrame, text_col: str, rounds: int = 3, k: int = 20
 ) -> DataFrame:
     """Apply the first `rounds` learned BPE merges back to the corpus
     and report the resulting top-k symbol vocabulary with OCCURRENCE
@@ -200,7 +178,7 @@ def bpe_tokenize_vocab(
     aggregate."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    _, merged = _merge_chain(_word_types(df, text_col), rounds, checkpoint_every)
+    _, merged = _merge_chain(_word_types(df, text_col), rounds)
     return (
         merged.select(F.explode("syms").alias("symbol"), "cnt")
         .groupBy("symbol")

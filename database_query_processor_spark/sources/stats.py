@@ -18,6 +18,15 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    DateType,
+    NumericType,
+    StringType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 
 @dataclass(frozen=True)
@@ -45,11 +54,28 @@ def table_stats(df: DataFrame, exact: bool = False) -> TableStats:
     )
 
 
+# Column types ANALYZE ... FOR COLUMNS accepts (Spark's
+# CommandUtils.supportsType); arrays, maps and structs raise
+# ANALYZE_UNSUPPORTED_COLUMN_TYPE.
+_ANALYZABLE = (
+    NumericType, BooleanType, DateType, TimestampType, TimestampNTZType,
+    StringType, BinaryType,
+)
+
+
 def analyze_table(spark: SparkSession, table: str) -> None:
     """Populate Catalyst CBO stats (row counts, per-column NDV/min/
     max/nulls) for a catalog table — the engine-side consumer of what
-    the `.stat` file fed in the reference."""
-    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR ALL COLUMNS")
+    the `.stat` file fed in the reference. Column stats cover the
+    columns whose types ANALYZE accepts; the row count covers the
+    table either way."""
+    cols = [
+        "`" + f.name.replace("`", "``") + "`"
+        for f in spark.table(table).schema
+        if isinstance(f.dataType, _ANALYZABLE)
+    ]
+    target = f"FOR COLUMNS {', '.join(cols)}" if cols else ""
+    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS {target}")
 
 
 def parse_stat(text: str, columns: list[str]) -> TableStats:

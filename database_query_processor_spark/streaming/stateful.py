@@ -450,8 +450,8 @@ def run_session_expiry_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     FILE -> one file-source batch guarantees it; a multi-file events
     dir (or a maxFilesPerTrigger split) could let a timer close a
     non-final session and flip its closed_by. Assert the precondition
-    loudly instead of letting the oracle go quietly stale (gen_sf1
-    consolidates events to one file for the same reason).
+    loudly instead of letting the oracle go quietly stale (artifacts/
+    gen_scale.py writes events as one file for the same reason).
 
     SINK: the parquet file sink, not memory — sessions are ~0.95 rows
     per input event on this horizon, and S12_DECOMP_r10 measured the

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from database_query_processor_spark.catalog import footer_schema
+from database_query_processor_spark.workdir import scratch_dir
 
 from . import normalize_event_ts
 
@@ -160,19 +161,12 @@ def _run_to_parquet_sink(out: DataFrame, prefix: str) -> DataFrame:
     every session exactly once under any batching (data-closed inline,
     timer-closed on expiry), so its update-mode emissions ARE
     append-semantics rows. A fresh scratch dir per run keeps re-runs
-    independent (the file sink otherwise accumulates across runs);
-    every dir is registered for atexit removal — the read-back is
-    lazy, so the files must outlive this call, but nothing needs them
-    past process exit (at the 100M-event probe scale each run leaves
-    GBs under /tmp; any dir orphaned by a hard kill is identifiable
-    by the dqps_stream_* prefix)."""
-    import atexit
-    import shutil
-    import tempfile
-
+    independent (the file sink otherwise accumulates across runs). It
+    lives under the process scratch root (workdir.scratch_dir), which
+    is removed at process exit: the read-back is lazy, so the files
+    must outlive this call, but nothing needs them past process exit."""
     spark = out.sparkSession
-    root = tempfile.mkdtemp(prefix=f"dqps_stream_{prefix}_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_dir(f"dqps_stream_{prefix}_")
     path = f"{root}/out"
     q = (
         out.writeStream.outputMode("append")

@@ -37,6 +37,21 @@ def test_engine_analyze_feeds_cbo(spark):
         spark.catalog.uncacheTable("nation")
 
 
+def test_engine_analyze_all_tables(spark):
+    """analyze() with no arguments covers every table, including
+    embeddings, whose ARRAY<FLOAT> column ANALYZE cannot take column
+    stats for: the row count still lands on it."""
+    eng = Engine(SF, spark=spark)
+    try:
+        eng.analyze()
+        for t in ("embeddings", "nation"):
+            stats = eng.sql(f"SELECT * FROM {t}")._jdf.queryExecution().optimizedPlan().stats()
+            assert stats.rowCount().isDefined(), t
+    finally:
+        for t in eng.tables:
+            spark.catalog.uncacheTable(t)
+
+
 def test_sweep_order_policy():
     """Harness policy (not library behavior): queries without a green
     row in the LATEST driver report sort first, risk-ordered

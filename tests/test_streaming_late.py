@@ -502,3 +502,22 @@ def test_conf_scope_restores_session_conf(spark):
         pass
     assert spark.conf.get(preset) == old
     assert spark.conf.get(fresh, None) is None
+
+
+def test_parquet_sink_dir_lies_under_scratch_root(spark):
+    """s06 writes its file sink under the one process scratch root
+    (workdir.scratch_dir), which is removed at exit, not into a
+    tempdir of its own."""
+    import os
+
+    from database_query_processor_spark import workdir
+    from database_query_processor_spark.streaming.dedup import run_stream_dedup
+    from tests.conftest import SF_SMOKE
+
+    out = run_stream_dedup(spark, SF_SMOKE)
+    files = out.inputFiles()
+    assert files and out.count() > 0
+    root = os.path.realpath(workdir._ROOT)
+    for f in files:
+        path = os.path.realpath(f.removeprefix("file:"))
+        assert os.path.commonpath([root, path]) == root, (root, f)

@@ -375,13 +375,33 @@ def _kmeans_codebook(
     quality path. Fit runs on a bounded deterministic sample (the fit
     is iterative over its input, so cap it; centroid quality needs a
     representative sample, not the corpus), and only the ``cells``
-    centers ever leave the JVM. cent_id = center index."""
+    centers ever leave the JVM. cent_id = center index.
+
+    The centers are a function of the input vectors (as a multiset),
+    ``cells`` and ``seed`` only — not of how the rows are partitioned,
+    which follows the host's core count. ``DataFrame.sample`` and the
+    k-means|| init both draw per partition with a seed derived from
+    the partition index, so the fit input is made canonical first:
+      * above ``sample_cap`` rows, the sample keeps a row when a
+        content hash, ``xxhash64(vec, seed)`` mod 10⁶, falls under
+        10⁶·sample_cap/n — about ``sample_cap`` rows, chosen by value
+        rather than by position;
+      * the fit input is sorted by ``vec_col`` and coalesced into one
+        partition, so KMeans sees the same rows in the same order and
+        sums them in one fixed order (across tasks, its partial sums
+        merge in completion order). The input is bounded by
+        ``sample_cap``, so one task is affordable."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     n = df.count()
-    sample = df if n <= sample_cap else df.sample(fraction=sample_cap / n, seed=seed)
-    feats = sample.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
+    sample = df
+    if n > sample_cap:
+        buckets = 1_000_000
+        keep = F.pmod(F.xxhash64(F.col(vec_col), F.lit(seed)), F.lit(buckets)) < buckets * sample_cap / n
+        sample = df.filter(keep)
+    canonical = sample.orderBy(F.col(vec_col)).coalesce(1)
+    feats = canonical.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
     model = KMeans(k=cells, seed=seed, featuresCol="features").fit(feats)
     return [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
 
@@ -463,7 +483,10 @@ def ann_ivf_topk(
       * ``"kmeans"``: a pyspark.ml KMeans fit on a bounded sample —
         the production centroid-quality path; same plumbing, better
         cell balance (recall pinned vs the exact oracle in
-        tests/test_recall.py).
+        tests/test_recall.py). The fit input is a content-hash
+        sample, sorted by vector, in one task, so the cells do not
+        change with the input's partitioning or the host's core
+        count (see _kmeans_codebook).
 
     Scale path (100 TB): centroids are tiny → collected and shipped
     in the task closure of _assign_cells' Arrow kernel, so assignment

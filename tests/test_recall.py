@@ -85,6 +85,25 @@ def test_ivf_kmeans_codebook_recall(planted):
     assert recall >= 0.5, (recall, got, exact_ids)
 
 
+@pytest.mark.parametrize("sample_cap", [100_000, 120], ids=["full", "sampled"])
+def test_kmeans_codebook_independent_of_partitioning(planted, sample_cap):
+    """The KMeans centers are a function of the vectors, cells and
+    seed only: the same 200 vectors laid out in 1, 3 or 7 partitions
+    (and in the fixture's own layout) give identical centers, both
+    when the whole input is fitted and when it is sampled (cap 120 <
+    200 rows). Per-partition sampling or k-means|| seeding would make
+    the codebook, and so recall, follow the host's core count."""
+    vecs = planted.select("embedding")
+    layouts = [vecs] + [vecs.repartition(p) for p in (1, 3, 7)]
+    centers = [
+        SIM._kmeans_codebook(frame, "embedding", SIM.IVF_CELLS, sample_cap=sample_cap)
+        for frame in layouts
+    ]
+    assert len(centers[0]) == SIM.IVF_CELLS
+    for other in centers[1:]:
+        assert other == centers[0]
+
+
 def test_ivf_bad_codebook_rejected(planted):
     with pytest.raises(ValueError):
         SIM.ann_ivf_topk(planted, "vec_id", "embedding", 1, codebook="nope")

@@ -44,10 +44,7 @@ def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description="xxhash64 injectivity on shingles")
     ap.add_argument("dirs", nargs="*", default=SF_DIRS)
     args = ap.parse_args(argv)
-    spark = get_spark(
-        app_name="collision-check-r12",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark(app_name="collision-check-r12")
     out = {}
     for sf_dir in args.dirs:
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))

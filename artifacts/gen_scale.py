@@ -273,10 +273,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--copies", type=int, required=True)
     ap.add_argument("--tables", nargs="+", choices=TABLES, default=list(TABLES))
     args = ap.parse_args(argv)
-    spark = get_spark(
-        app_name="dqps-gen-scale",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark(app_name="dqps-gen-scale")
     for table, n in build(spark, args.src, args.dst, args.copies, args.tables).items():
         print(f"{table}: {n} rows", flush=True)
 

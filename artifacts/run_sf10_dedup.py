@@ -62,10 +62,7 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
     sections = set(args.sections.split(","))
 
-    spark = get_spark(
-        app_name="sf10-dedup", driver_memory=args.driver_memory,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark(app_name="sf10-dedup", driver_memory=args.driver_memory)
     ok = True
 
     def emit(t0, name, probs, tag):

@@ -53,10 +53,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--data", default=SF10, help="gen_scale --dst")
     ap.add_argument("--driver-memory", default="64g")
     args = ap.parse_args(argv)
-    spark = get_spark(
-        app_name="sf10-text", driver_memory=args.driver_memory,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark(app_name="sf10-text", driver_memory=args.driver_memory)
     name = "x50_bigram_lm_quality"
     spec = next(s for s in all_specs() if s.name == name)
     frame = spec.build(spark, args.data).filter(f"doc_id % {X50_SAMPLE_MOD} = 0")

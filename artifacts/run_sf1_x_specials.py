@@ -63,10 +63,7 @@ def main(argv: list[str] | None = None) -> int:
     from database_query_processor_spark.operators import similarity as SIM
     from database_query_processor_spark.workload.extensions import _hardneg_oracle
 
-    spark = get_spark(
-        app_name="sf1-x-specials", driver_memory=args.driver_memory,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark(app_name="sf1-x-specials", driver_memory=args.driver_memory)
 
     def check(name, df, sql, sf_dir):
         t0 = time.time()

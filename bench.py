@@ -211,13 +211,7 @@ def _sf_number(sf: str):
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # No console progress bars: they stream to the same captured output as
-    # the final JSON line and eat the driver's limited tail buffer.
-    spark = get_spark(
-        app_name="dqps-bench",
-        driver_memory="64g",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark(app_name="dqps-bench")
 
     def _run(spec) -> None:
         spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -25,8 +25,8 @@ import argparse
 import sys
 import time
 
-from database_query_processor_spark.catalog import DEFAULT_SF_DIR, register_tables
-from database_query_processor_spark.plans.dialect import translate
+from database_query_processor_spark.catalog import DEFAULT_SF_DIR
+from database_query_processor_spark.engine import Engine
 from database_query_processor_spark.session import get_spark
 from database_query_processor_spark.sources.sink import write_result
 
@@ -53,14 +53,12 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     with open(args.query_file, encoding="utf-8") as fh:
-        raw = fh.read().strip().rstrip(";")
-    sql = translate(raw) if args.dialect == "reference" else raw
+        query = fh.read().strip().rstrip(";")
 
     if args.pagesize is not None:
         print(f"note: pagesize={args.pagesize} ignored (Tungsten manages memory)", file=sys.stderr)
-    spark = get_spark(app_name="dqps-cli", shuffle_partitions=args.numbuffer)
-    register_tables(spark, args.data_dir)
-    df = spark.sql(sql)
+    eng = Engine(args.data_dir, get_spark(app_name="dqps-cli", shuffle_partitions=args.numbuffer))
+    df = eng.reference_sql(query) if args.dialect == "reference" else eng.sql(query)
     if args.explain or args.confirm:
         df.explain("formatted")
     if args.confirm:

@@ -18,9 +18,7 @@ run and engine-to-engine.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -46,13 +44,3 @@ def avg_money(col: str | Column, alias: str) -> Column:
     """Deterministic AVG: exact decimal sum cast double, / count."""
     c = F.col(col) if isinstance(col, str) else col
     return (F.sum(dec(c)).cast("double") / F.count(c)).alias(alias)
-
-
-def group_agg(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> DataFrame:
-    """GROUP BY keys with real aggregates."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
-def having(df_grouped: DataFrame, predicate: Column) -> DataFrame:
-    """HAVING = filter over the aggregated result."""
-    return df_grouped.filter(predicate)

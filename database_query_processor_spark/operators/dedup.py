@@ -66,12 +66,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def spread(df: DataFrame) -> DataFrame:
-    """Public alias of `_spread` for other CPU-heavy map pipelines
-    (corpus prep, workload compositions)."""
-    return _spread(df)
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Shingling/hashing stages are CPU-bound maps, so their
     parallelism equals the number of input splits — a small parquet
@@ -143,12 +137,6 @@ def doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) ->
             ).alias("hs64"),
         )
     )
-
-
-def shingle_hashes(text_col: str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles → 32-bit hashes."""
-    grams = F.array_distinct(word_ngrams(tokens(text_col), n))
-    return F.transform(grams, lambda g: F.xxhash64(g).bitwiseAND(F.lit(0xFFFFFFFF)))
 
 
 def _signature_from_shingles(grams_df: DataFrame) -> DataFrame:

@@ -133,12 +133,6 @@ def group_by_distinct(df: DataFrame, group_cols: Sequence[str]) -> DataFrame:
     return df.select(*group_cols).distinct()
 
 
-def limit_(df: DataFrame, n: int) -> DataFrame:
-    """LIMIT — absent from the reference grammar (SURVEY.md §2.6).
-    Spark executes as LocalLimit per partition + GlobalLimit."""
-    return df.limit(n)
-
-
 def salted_join(
     left: DataFrame,
     right: DataFrame,

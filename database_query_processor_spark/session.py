@@ -137,6 +137,9 @@ def get_spark(
         # DIVIDE_BY_ZERO, not a NULL.
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # no [Stage N:> ...] bars on stderr: they interleave with the
+        # CLI's and tools' own output and fill captured logs
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.warehouse.dir", "/tmp/dqps-warehouse")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # InferFiltersFromGenerate copies the generator's INPUT

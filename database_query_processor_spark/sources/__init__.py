@@ -7,7 +7,11 @@ Reference format inventory → here:
   * RandomDB synthetic datagen (src/RandomDB.java:117-175) →
     :mod:`randomdb` (distributed, deterministic, shuffle-free).
   * ConvertTxtToTbl tab-text ingest (src/ConvertTxtToTbl.java:18-73)
-    → :mod:`ingest` (csv reader with det schema → parquet).
+    → :mod:`ingest` (text scan parsed by from_csv with the det schema,
+    RandomDB's trailing tab dropped → parquet).
+  * `<T>.md` schema + `<T>.tbl` tuple stream, Scan's input
+    (src/qp/operators/Scan.java:43-86) → :mod:`javaser` (Java
+    serialization decoder; `read_tbl_dataset` is a binaryFile scan).
   * `<T>.stat` statistics sidecar (src/RandomDB.java:147-170) →
     :mod:`stats` (row count + per-column distincts; ANALYZE TABLE
     wiring for Catalyst CBO).

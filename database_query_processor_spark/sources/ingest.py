@@ -3,13 +3,14 @@
 Reference: reads `<T>.txt` (tab-separated rows, no header), types each
 field per the serialized `<T>.md` schema, writes serialized `Tuple`s
 (src/ConvertTxtToTbl.java:18-73). Here the typed read is a single
-distributed csv scan with the det-derived schema, and the sink is
-parquet — self-describing, columnar, splittable.
+distributed text scan parsed by `from_csv` with the det-derived schema,
+and the sink is parquet — self-describing, columnar, splittable.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from database_query_processor_spark.sources.det import TableSpec
 
@@ -17,31 +18,31 @@ from database_query_processor_spark.sources.det import TableSpec
 def read_text_table(
     spark: SparkSession, path: str, spec: TableSpec, validate: bool = True
 ) -> DataFrame:
-    """`<T>.txt` + spec → typed DataFrame. FAILFAST mirrors the
-    reference's exit-on-bad-field (src/ConvertTxtToTbl.java:60-65) —
-    but only for UNPARSEABLE tokens: Spark file sources force the
-    user schema nullable, and an EMPTY token parses to NULL rather
-    than erroring (the reference's Integer.parseInt("") would exit).
-    ``validate`` closes that gap with one post-read scan that raises
-    on any NULL cell, enforcing the reference's no-NULLs data model
-    (det.py) that downstream operators assume."""
-    # quote/escape disabled: the reference splits rows on raw tabs
-    # (no quoting concept) — with univocity quoting on, a field
-    # STARTING with a double quote would strip quotes or swallow tabs
-    # inside the "quoted" region, mis-parsing rows the reference
-    # accepts verbatim.
-    df = spark.read.csv(
-        path,
-        sep="\t",
-        header=False,
-        schema=spec.schema,
-        mode="FAILFAST",
-        quote="",
-        escape="",
-    )
-    if validate:
-        from pyspark.sql import functions as F
+    """`<T>.txt` + spec → typed DataFrame, parsed in one JVM-side scan.
 
+    Rows split on raw tabs: quote/escape are disabled because the
+    reference has no quoting concept, so a field starting with a double
+    quote is content, kept verbatim. The reference's RandomDB ends every
+    row with a tab (src/RandomDB.java:117-145); one trailing tab is
+    dropped exactly when the row then holds one field per column, so
+    `3<tab>` under a two-column spec still reads as an empty 2nd field.
+
+    FAILFAST mirrors the reference's exit-on-bad-field
+    (src/ConvertTxtToTbl.java:60-65): an unparseable token, or a row
+    with more or fewer fields than the spec, raises. An EMPTY token
+    parses to NULL instead (the reference's Integer.parseInt("") would
+    exit). ``validate`` closes that gap with one post-read scan that
+    raises on any NULL cell, enforcing the reference's no-NULLs data
+    model (det.py) that downstream operators assume. That scan parses
+    every field of every row, so it also raises on a malformed row."""
+    trailing_tab = rf"^([^\t]*(?:\t[^\t]*){{{len(spec.columns) - 1}}})\t$"
+    parsed = F.from_csv(
+        F.regexp_replace("value", trailing_tab, "$1"),
+        spec.schema.toDDL(),
+        {"sep": "\t", "quote": "", "escape": "", "mode": "FAILFAST"},
+    )
+    df = spark.read.text(path).select(parsed.alias("row")).select("row.*")
+    if validate:
         anynull = None
         for f in spec.schema.fields:
             c = F.col(f.name).isNull()

@@ -20,8 +20,10 @@ no driver-side decode.
 
 from __future__ import annotations
 
+import os
 import struct
 from dataclasses import dataclass
+from urllib.parse import urlsplit
 
 # stream constants (Java Object Serialization Stream Protocol)
 MAGIC = 0xACED
@@ -336,16 +338,29 @@ def schema_ddl(md_bytes: bytes) -> str:
     return ", ".join(f"`{name}` {_spark_type(t)}" for name, t in read_schema(md_bytes))
 
 
+def _read_bytes(path: str) -> bytes:
+    """Whole file at a local path (relative or absolute) or at any URI
+    pyarrow's filesystem layer resolves (file:, hdfs:, s3:, ...)."""
+    from pyarrow import fs as pafs
+
+    if not urlsplit(path).scheme:
+        path = os.path.abspath(path)
+    filesystem, inner = pafs.FileSystem.from_uri(path)
+    with filesystem.open_input_file(inner) as fh:
+        return fh.read()
+
+
 def read_tbl_dataset(spark, md_path: str, tbl_glob: str):
     """Distributed load of a reference-native table: driver reads the
     tiny `.md` once for the schema; the `.tbl` shards are decoded
     executor-side, one whole file per task (binaryFile +
     Arrow-batched mapInPandas), so a sharded dataset decodes with
-    file-level parallelism and zero driver involvement."""
+    file-level parallelism and zero driver involvement. Both paths
+    take a local path or a URI: Spark's binaryFile source lists and
+    reads the shards, pyarrow's filesystem layer reads the `.md`."""
     import pandas as pd
 
-    with open(md_path, "rb") as fh:
-        md = fh.read()
+    md = _read_bytes(md_path)
     cols = read_schema(md)
     ddl = schema_ddl(md)
 

@@ -1,16 +1,16 @@
 """Windowed event-time aggregation: tumbling / sliding / session
-windows, batch and Structured-Streaming forms.
+windows.
 
-The streaming entry (`run_tumbling_stream`) drives a real
-readStream → watermark → window-agg → memory-sink query to completion
-over the finite events parquet — the same topology that would run
-against Kafka at scale, where the shuffle key is (window, group) and
-state is bounded by the watermark.
+The streaming entries (`run_tumbling_stream`, `run_sliding_stream`,
+`run_session_stream`) each drive a real readStream → watermark →
+window-agg → memory-sink query to completion over the finite events
+parquet — the same topology that would run against Kafka at scale,
+where the shuffle key is (window, group) and state is bounded by the
+watermark.
 
-Batch forms use the identical `window()` / `session_window()`
-expressions, so results are oracle-comparable; timestamps stay
-TIMESTAMP_NTZ (catalog normalizes the nanos column) to match DuckDB's
-naive timestamps.
+Window starts are cast to TIMESTAMP_NTZ (catalog normalizes the nanos
+column) to match DuckDB's naive timestamps, so results are
+oracle-comparable.
 """
 
 from __future__ import annotations
@@ -24,41 +24,6 @@ from database_query_processor_spark.catalog import footer_schema
 from database_query_processor_spark.workdir import scratch_dir
 
 from . import normalize_event_ts
-
-def tumbling_counts(events: DataFrame, size: str = "1 hour") -> DataFrame:
-    """Tumbling event-time windows: count + min/max value per
-    (window, event_type). min/max are order-independent, so the
-    result is engine-stable without the decimal contract."""
-    return (
-        events.groupBy(F.window("ts", size).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.min("value").alias("min_value"), F.max("value").alias("max_value"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "min_value", "max_value")
-    )
-
-
-def sliding_counts(events: DataFrame, size: str = "1 hour", slide: str = "30 minutes") -> DataFrame:
-    """Sliding windows: each event lands in size/slide windows."""
-    return (
-        events.groupBy(F.window("ts", size, slide).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n")
-    )
-
-
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-user session windows with a fixed inactivity gap: session =
-    maximal event chain with inter-event gap < `gap`. session_end =
-    last event + gap (Spark session_window semantics)."""
-    return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -188,10 +153,12 @@ def _run_to_parquet_sink(out: DataFrame, prefix: str) -> DataFrame:
 
 
 def run_tumbling_stream(spark: SparkSession, sf_dir: str, size: str = "1 hour") -> DataFrame:
-    """REAL streaming execution of tumbling_counts: file-source
+    """Tumbling event-time windows, streamed: count + min/max value per
+    (window, event_type) — min/max are order-independent, so the result
+    is engine-stable without the decimal contract. File-source
     readStream over events.parquet, 10-minute watermark, complete-mode
     memory sink, driven synchronously to completion. Returns the sink
-    table (same schema/values as the batch form)."""
+    table."""
     stream = _events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -208,9 +175,10 @@ def run_tumbling_stream(spark: SparkSession, sf_dir: str, size: str = "1 hour") 
 def run_sliding_stream(
     spark: SparkSession, sf_dir: str, size: str = "1 hour", slide: str = "30 minutes"
 ) -> DataFrame:
-    """REAL streaming execution of sliding_counts: each event lands in
-    size/slide overlapping windows; state per (window, event_type) is
-    bounded by the watermark at scale."""
+    """Sliding event-time windows, streamed: count per (window,
+    event_type), where each event lands in size/slide overlapping
+    windows; state per (window, event_type) is bounded by the watermark
+    at scale."""
     stream = _events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -224,9 +192,11 @@ def run_sliding_stream(
 def run_session_stream(
     spark: SparkSession, sf_dir: str, gap: str = "30 minutes"
 ) -> DataFrame:
-    """REAL streaming execution of session_windows: dynamic-gap
-    session_window state per user, merged as events arrive — the
-    watermark closes sessions whose gap has passed at scale."""
+    """Per-user session windows, streamed: session = maximal event chain
+    with inter-event gap < `gap`, session_end = last event + gap (Spark
+    session_window semantics). State is merged per user as events
+    arrive; the watermark closes sessions whose gap has passed at
+    scale."""
     stream = _events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")

@@ -14,7 +14,11 @@ import os
 
 from database_query_processor_spark.catalog import load_table
 from database_query_processor_spark.workdir import scratch_dir
-from database_query_processor_spark.sources import generate_table, parse_det
+from database_query_processor_spark.sources import (
+    generate_table,
+    ingest_text_table,
+    parse_det,
+)
 from database_query_processor_spark.workload import QuerySpec
 
 # Same layout as the reference's testcases/CUSTOMER.det:1-7.
@@ -68,30 +72,6 @@ FROM read_csv('{os.path.join(_JAVASER_FIXTURE, "CART.txt")}', delim='\t',
 """
 
 
-def javaser_datasource_read(spark, sf_dir):
-    """Same table as src06, loaded through the REGISTERED custom
-    source (`spark.read.format("javaser")`, Python DataSource API):
-    schema from the .md sidecar at plan time, one InputPartition per
-    .tbl shard, rows decoded inside the scan (sf_dir unused: the
-    fixture IS the dataset)."""
-    from database_query_processor_spark.sources.javaser_source import JavaSerDataSource
-
-    try:
-        spark.dataSource.register(JavaSerDataSource)
-    except Exception as e:
-        # re-registration in one session is the only expected failure;
-        # a REAL registration error (missing DataSource API) must not
-        # be swallowed into a later DATA_SOURCE_NOT_FOUND mystery
-        if "exist" not in str(e).lower() and "registered" not in str(e).lower():
-            raise  # already registered in this session
-    return (
-        spark.read.format("javaser")
-        .option("md", os.path.join(_JAVASER_FIXTURE, "CART.md"))
-        .option("path", os.path.join(_JAVASER_FIXTURE, "CART.tbl"))
-        .load()
-    )
-
-
 def javaser_read(spark, sf_dir):
     """Load a table in the reference's NATIVE on-disk format — the
     Java-serialized `<T>.md` schema + `<T>.tbl` tuple stream its
@@ -107,6 +87,31 @@ def javaser_read(spark, sf_dir):
         spark,
         os.path.join(_JAVASER_FIXTURE, "CART.md"),
         os.path.join(_JAVASER_FIXTURE, "CART.tbl"),
+    )
+
+
+# .det of the committed CART fixture (500 RandomDB rows, PK range 2x).
+_CART_DET = """\
+4
+100
+cartid INTEGER 1000 PK 4
+cid INTEGER 1000 FK 4
+status STRING 8 NK 16
+remarks STRING 38 NK 76
+"""
+
+
+def reference_txt_ingest(spark, sf_dir):
+    """Same table as src06, ingested from the reference's own tab-text
+    dump of it (`CART.txt`, one trailing tab per row as RandomDB writes
+    it) through sources/ingest.py — the ConvertTxtToTbl entry point
+    (src/ConvertTxtToTbl.java:18-73) — into parquet, then read back
+    (sf_dir unused: the fixture IS the dataset)."""
+    return ingest_text_table(
+        spark,
+        os.path.join(_JAVASER_FIXTURE, "CART.txt"),
+        parse_det(_CART_DET),
+        scratch_dir("dqps_txt_ingest_"),
     )
 
 
@@ -836,10 +841,11 @@ SPECS = [
               "reference-native table load: Java-serialized .md/.tbl "
               "decoded executor-side (binaryFile + mapInPandas), "
               "oracle = the reference's own .txt dump"),
-    QuerySpec("src07_javaser_datasource", javaser_datasource_read, _JAVASER_ORACLE,
-              "custom Spark data source (Python DataSource API) for the "
-              "reference-native format: .md schema at plan time, one "
-              "InputPartition per .tbl shard"),
+    QuerySpec("src07_reference_txt_ingest", reference_txt_ingest, _JAVASER_ORACLE,
+              "ConvertTxtToTbl ingest of the reference's own tab-text dump "
+              "(trailing tab per row): one text scan parsed by from_csv "
+              "with the .det schema, FAILFAST + no-NULL check, parquet "
+              "sink; oracle = DuckDB's read of the same .txt"),
     QuerySpec("src18_javaser_write_roundtrip", javaser_write_roundtrip,
               _JAVASER_WRITE_ORACLE,
               "reference-native .md/.tbl WRITER (byte-identical Java "

@@ -8,8 +8,9 @@ files land in the scratch dir — the reference tree is never written),
 generates its demo-schema tables at the reference's experiment scale
 with ITS OWN RandomDB/ConvertTxtToTbl, runs each testcase through
 `java QueryMain` and parses the engine's printed `Execution time`,
-then ingests the very same .txt files into parquet
-(sources/ingest.py) and runs the very same query text through
+then ingests the very same .txt files into parquet with
+sources/ingest.py::ingest_text_table (the engine's one ConvertTxtToTbl
+path) and runs the very same query text through
 plans/dialect.translate → spark.sql with a noop sink.
 
 Output: one JSON line
@@ -124,27 +125,19 @@ def main() -> None:
     for i in range(1, 11):
         shutil.copy(os.path.join(REF, "testcases", f"query{i}.sql"), WORK)
 
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from database_query_processor_spark.plans.dialect import translate
     from database_query_processor_spark.session import get_spark
+    from database_query_processor_spark.sources import ingest_text_table
     from database_query_processor_spark.sources.det import parse_det_file
 
-    spark = get_spark(app_name="dqps-headtohead", driver_memory="32g")
+    spark = get_spark(app_name="dqps-headtohead")
     for t in TABLES:
-        spec = parse_det_file(os.path.join(WORK, f"{t}.det"))
-        # RandomDB emits a trailing \t per row -> read with a dummy
-        # final column, then drop it.
-        schema = StructType(
-            list(spec.schema.fields) + [StructField("_trail", StringType())]
-        )
-        df = (
-            spark.read.csv(os.path.join(WORK, f"{t}.txt"), sep="\t", schema=schema)
-            .drop("_trail")
-        )
-        pq = os.path.join(WORK, f"{t.lower()}.parquet")
-        df.write.mode("overwrite").parquet(pq)
-        spark.read.parquet(pq).createOrReplaceTempView(t)
+        ingest_text_table(
+            spark,
+            os.path.join(WORK, f"{t}.txt"),
+            parse_det_file(os.path.join(WORK, f"{t}.det")),
+            os.path.join(WORK, f"{t.lower()}.parquet"),
+        ).createOrReplaceTempView(t)
 
     results: dict[str, dict] = {}
     for i in range(1, 11):

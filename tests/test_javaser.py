@@ -78,28 +78,6 @@ def test_tuples_match_reference_txt(ref_table):
 
 
 @needs_java
-def test_custom_datasource(spark, ref_table):
-    """spark.read.format('javaser') through the registered Python
-    DataSource must reproduce the reference's rows with the .md-derived
-    schema, one partition per .tbl file."""
-    from database_query_processor_spark.sources.javaser_source import JavaSerDataSource
-
-    try:
-        spark.dataSource.register(JavaSerDataSource)
-    except Exception:
-        pass
-    df = (
-        spark.read.format("javaser")
-        .option("md", os.path.join(ref_table, "CART.md"))
-        .option("path", os.path.join(ref_table, "CART.tbl"))
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 1  # one file -> one partition
-    got = sorted(tuple(r) for r in df.collect())
-    assert got == sorted(tuple(r) for r in _txt_rows(ref_table))
-
-
-@needs_java
 def test_distributed_read(spark, ref_table):
     df = javaser.read_tbl_dataset(
         spark,
@@ -110,6 +88,41 @@ def test_distributed_read(spark, ref_table):
     want = sorted(tuple(r) for r in _txt_rows(ref_table))
     assert got == want
     assert df.schema.fieldNames()[0].endswith("cartid")
+
+
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+CART_DET = DET.format(pk=1000)  # the committed CART fixture: 500 rows
+
+
+def _fixture_tbl_rows():
+    with open(os.path.join(FIXTURES, "CART.tbl"), "rb") as f:
+        return sorted(tuple(r) for r in javaser.read_tuples(f.read()))
+
+
+def test_read_tbl_dataset_md_uri_and_relative_path(spark):
+    """The `.md` sidecar resolves through pyarrow's filesystem layer: a
+    `file:` URI and a path relative to the working directory both load
+    the committed CART fixture."""
+    md = os.path.join(FIXTURES, "CART.md")
+    tbl = os.path.join(FIXTURES, "CART.tbl")
+    for md_path in ("file://" + md, os.path.relpath(md)):
+        df = javaser.read_tbl_dataset(spark, md_path, tbl)
+        assert sorted(tuple(r) for r in df.collect()) == _fixture_tbl_rows(), md_path
+
+
+def test_ingest_reference_txt_dump_equals_tbl(spark, tmp_path):
+    """ConvertTxtToTbl's two ends agree: ingesting the reference's own
+    `.txt` dump (every row ends in a tab) gives exactly the rows the
+    reference serialized into the matching `.tbl`."""
+    from database_query_processor_spark.sources import ingest_text_table, parse_det
+
+    df = ingest_text_table(
+        spark, os.path.join(FIXTURES, "CART.txt"), parse_det(CART_DET),
+        str(tmp_path / "cart_parquet"),
+    )
+    assert df.columns == ["cartid", "cid", "status", "remarks"]
+    got = sorted(tuple(r) for r in df.collect())
+    assert len(got) == 500 and got == _fixture_tbl_rows()
 
 
 def _stream(*body: bytes) -> bytes:

@@ -62,11 +62,11 @@ def test_ann_lsh_finds_planted_neighbor(planted):
 
 
 def test_ivf_kmeans_codebook_recall(planted):
-    """The KMeans codebook path must run the same IVF plumbing as the
-    deterministic 'ids' codebook and beat/match its recall vs the
-    exact cosine top-k: the planted near-copy of the query shares the
-    query's cell under any reasonable codebook, so it must appear in
-    a 2-of-8-cell probe."""
+    """IVF top-10 with the KMeans codebook, checked against the exact
+    cosine top-10 for query 7: the planted near-copy of the query
+    (cos >= 0.99, so it shares the query's cell under any reasonable
+    codebook) is found by a 2-of-8-cell probe, and recall@10 is at
+    least 0.5."""
     query_id = 7
     exact_ids = [
         r.vec_id

@@ -70,6 +70,11 @@ def test_default_driver_memory_keeps_compressed_oops(monkeypatch):
         assert session._compressed_oops(want, "") is True
 
 
+def test_console_progress_bar_off(spark):
+    """get_spark itself turns off the [Stage N:> ...] bars on stderr."""
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
+
+
 def test_compressed_oops_follows_heap_and_flags():
     assert session._compressed_oops("48g", "") is False
     assert session._compressed_oops("32g", "") is False

@@ -123,6 +123,24 @@ def test_ingest_roundtrip(spark, spec, tmp_path):
     assert out.exceptAll(src).count() == 0 and src.exceptAll(out).count() == 0
 
 
+def test_read_text_table_rejects_extra_field(spark, tmp_path):
+    """A row with one field more than the spec fails the read itself,
+    not a later action: a trailing tab is dropped only when it leaves
+    one field per column."""
+    from database_query_processor_spark.sources.ingest import read_text_table
+
+    spec = parse_det("2\n8\na INTEGER 10 PK 4\nb INTEGER 10 NK 4\n")
+    ok = tmp_path / "ok.txt"
+    ok.write_text("1\t2\t\n3\t4\n")
+    assert sorted(tuple(r) for r in read_text_table(spark, str(ok), spec).collect()) == [
+        (1, 2), (3, 4)
+    ]
+    bad = tmp_path / "bad.txt"
+    bad.write_text("1\t2\n3\t4\t5\n")
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        read_text_table(spark, str(bad), spec)
+
+
 def test_result_sink_format(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "a"), (2, None)], "k int, v string"

@@ -11,10 +11,10 @@ driver collect — the sink write exercises the whole distributed plan).
 Noise control (a single long-lived JVM accumulates hundreds of stages
 of GC debt across the suite; back-to-back whole-suite runs historically
 swung individual queries 2-3×):
-  * every run is preceded by spark.catalog.clearCache() — builders
-    that persist() intermediates (x02/x04/x24) otherwise leak a new
-    cached copy per build and the accumulated pressure bleeds into
-    later queries;
+  * every run is its own cache scope (database_query_processor_spark/
+    cache.py), closed after the timer stops: what the run's operators
+    persisted is released outside the timed window, so each timed run
+    starts cold;
   * an explicit JVM System.gc() barrier before EVERY timed run (not
     just once per query) keeps one run's garbage from being collected
     inside the next run's timing, followed by a short drain pause:
@@ -46,6 +46,7 @@ import statistics
 import sys
 import time
 
+from database_query_processor_spark.cache import scope
 from database_query_processor_spark.session import get_spark
 from database_query_processor_spark.workload import all_specs
 
@@ -213,8 +214,11 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="dqps-bench")
 
-    def _run(spec) -> None:
-        spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    def _run(spec) -> float:
+        with scope():
+            t0 = time.perf_counter()
+            spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return time.perf_counter() - t0
 
     def _local_dir_bytes() -> int:
         # Sum of all block-manager local dirs (shuffle + RDD spill files).
@@ -232,7 +236,6 @@ def main() -> None:
         return total
 
     def _gc_barrier() -> None:
-        spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
         # ContextCleaner reacts to that gc by asynchronously deleting
         # shuffle/RDD files; drain those deletes HERE, not inside the
@@ -264,9 +267,7 @@ def main() -> None:
         runs = []
         for _ in range(TIMED_RUNS):
             _gc_barrier()
-            t0 = time.perf_counter()
-            _run(spec)
-            runs.append(round(time.perf_counter() - t0, 3))
+            runs.append(round(_run(spec), 3))
         return runs
 
     for spec in specs:
@@ -326,7 +327,7 @@ def main() -> None:
         "queries_median": medians,
         "raw_runs": raw,
         "methodology": (
-            f"min of {TIMED_RUNS} after {WARM_RUNS} warm; clearCache+System.gc+drain "
+            f"min of {TIMED_RUNS} after {WARM_RUNS} warm; cache scope+System.gc+drain "
             "barrier before every timed run; baseline outliers re-run once "
             f"({TIMED_RUNS} more timed runs, min/median over all) and marked "
             "weather_rerun with the pre-rerun min/median kept for "

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from database_query_processor_spark.cache import scope
 from database_query_processor_spark.catalog import (
     DEFAULT_SF_DIR,
     load_table,
@@ -60,9 +61,11 @@ class Engine:
         to the driver and written there as one file, so it must fit in
         ``spark.driver.maxResultSize`` (Spark's default is 1g). A larger
         result fails loudly before ``path`` is touched; write it with
-        ``single_file=False`` (one file per partition, in parallel)."""
-        df = self.reference_sql(query) if dialect == "reference" else self.sql(query)
-        write_result(df, path, single_file=single_file)
+        ``single_file=False`` (one file per partition, in parallel).
+        The query's cached intermediates are released on return."""
+        with scope():
+            df = self.reference_sql(query) if dialect == "reference" else self.sql(query)
+            write_result(df, path, single_file=single_file)
 
     def analyze(self, *tables: str) -> None:
         """Populate CBO statistics for the given (or all) tables.

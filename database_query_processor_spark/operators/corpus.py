@@ -13,9 +13,9 @@ Scale design:
     (edges ⋈ labels) → groupBy-min rounds. Each round is one shuffle
     keyed by node id; rounds needed = O(log(component diameter)), and
     near-dup components are near-cliques (diameter ≤ 2-3), so 2-4
-    rounds in practice. Labels are persisted per round and the
-    previous round unpersisted; at 100 TB, localCheckpoint every few
-    rounds to truncate lineage.
+    rounds in practice. Each round's labels are eager-checkpointed, so
+    lineage stays O(1) and the previous round's blocks are freed by
+    the ContextCleaner.
   * Decontamination: the benchmark side is tiny by construction
     (~1% held-out slice), so its distinct n-gram set is broadcast —
     the training corpus is filtered in a single scan + broadcast hash
@@ -35,10 +35,10 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from database_query_processor_spark.cache import persist, scope
 from database_query_processor_spark.functions.text import tokens, word_ngrams
 
 # --- connected components ------------------------------------------------
@@ -58,41 +58,40 @@ def connected_components(
     round's labels are checkpointed, so lineage stays O(1) instead of
     growing one join+agg per round — without it, deep chains
     (high-diameter clusters) re-plan an ever-taller tree and
-    eventually blow the planner."""
-    sym = edges.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    labels = nodes.select(
-        F.col(nodes.columns[0]).alias("node_id"),
-        F.col(nodes.columns[0]).alias("cluster_id"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # Convergence check: labels only ever decrease (min-propagation),
-    # so the labels are a fixpoint iff sum(cluster_id) is unchanged —
-    # one cheap aggregate per round instead of a self-join diff.
-    cur_sum = labels.agg(F.sum("cluster_id")).first()[0]
-    for _ in range(max_rounds):
-        prop = sym.join(labels, sym.src == labels.node_id).select(
-            F.col("dst").alias("node_id"), "cluster_id"
-        )
-        # localCheckpoint (eager) both materializes this round's labels
-        # for reuse AND truncates lineage at the checkpointed RDD; the
-        # superseded round's blocks are released by the ContextCleaner
-        # once the old `labels` reference drops.
-        new = (
-            labels.union(prop)
-            .groupBy("node_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .localCheckpoint(eager=True)
-        )
-        new_sum = new.agg(F.sum("cluster_id")).first()[0]
-        labels.unpersist()
-        labels = new
-        if new_sum == cur_sum:
-            break
-        cur_sum = new_sum
-    sym.unpersist()
-    return labels
+    eventually blow the planner. The symmetrized edges and the seed
+    labels are persisted in this call's own scope (cache.py) and
+    released on every exit path."""
+    with scope():
+        sym = persist(edges.select(
+            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        ).union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))))
+        labels = persist(nodes.select(
+            F.col(nodes.columns[0]).alias("node_id"),
+            F.col(nodes.columns[0]).alias("cluster_id"),
+        ))
+        # Convergence check: labels only ever decrease (min-propagation),
+        # so the labels are a fixpoint iff sum(cluster_id) is unchanged —
+        # one cheap aggregate per round instead of a self-join diff.
+        cur_sum = labels.agg(F.sum("cluster_id")).first()[0]
+        for _ in range(max_rounds):
+            prop = sym.join(labels, sym.src == labels.node_id).select(
+                F.col("dst").alias("node_id"), "cluster_id"
+            )
+            # localCheckpoint (eager) both materializes this round's labels
+            # for reuse AND truncates lineage at the checkpointed RDD; the
+            # superseded round's blocks are released by the ContextCleaner
+            # once the old `labels` reference drops.
+            labels = (
+                labels.union(prop)
+                .groupBy("node_id")
+                .agg(F.min("cluster_id").alias("cluster_id"))
+                .localCheckpoint(eager=True)
+            )
+            new_sum = labels.agg(F.sum("cluster_id")).first()[0]
+            if new_sum == cur_sum:
+                break
+            cur_sum = new_sum
+        return labels
 
 
 def keep_best_per_cluster(

@@ -33,10 +33,10 @@ from __future__ import annotations
 
 import random
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from database_query_processor_spark.cache import persist
 from database_query_processor_spark.functions.text import (
     content_fingerprint,
     tokens,
@@ -121,9 +121,8 @@ def doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) ->
     shingles (100 TB) the birthday bound expects ~27k colliding PAIRS
     corpus-wide; a collision only perturbs a result when both grams
     co-occur in one candidate pair — the same p≈2^-64 trade the LSH
-    band keys already make. The 32-bit masked hash the MinHash
-    permutations consume is derived as hs64 & 0xFFFFFFFF, exactly the
-    xxhash64(g).bitwiseAND(...) the string pipeline computed.
+    band keys already make. The MinHash permutations consume
+    hs64 & 0xFFFFFFFF (see _signature_from_hashes64).
 
     Tokens materialize in their own projection — see doc_shingles."""
     return (
@@ -139,10 +138,14 @@ def doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) ->
     )
 
 
-def _signature_from_shingles(grams_df: DataFrame) -> DataFrame:
-    """(doc_id, grams) → (doc_id, sig).
+def _signature_from_hashes64(hs_df: DataFrame) -> DataFrame:
+    """(doc_id, hs64) → (doc_id, sig): signatures from the 64-bit
+    shingle-hash proxy. Masking to 32 bits gives exactly
+    xxhash64(gram) & 0xFFFFFFFF of each `doc_shingles` gram string, so
+    signatures equal the string form's (pinned by tests/test_plans.py::
+    test_minhash_signature_fused_fold_matches_reference).
 
-    The shingle-hash array is materialized in its own projection and
+    The masked hash array is materialized in its own projection and
     the permutation fold references that attribute. Inlining the hash
     pipeline into the fold (one projection) makes the expression tree
     ~64× larger — Catalyst and codegen choke on it (30s+ of
@@ -156,30 +159,10 @@ def _signature_from_shingles(grams_df: DataFrame) -> DataFrame:
     per-permutation array_min(transform(...)) — 64 separate array
     traversals — which measured 2.2× slower at sf0.1 and produced
     bit-identical signatures)."""
-    with_hashes = grams_df.select(
+    with_hashes = hs_df.select(
         "doc_id",
-        F.transform("grams", lambda g: F.xxhash64(g).bitwiseAND(F.lit(0xFFFFFFFF))).alias("hs"),
+        F.transform("hs64", lambda h: h.bitwiseAND(F.lit(0xFFFFFFFF))).alias("hs"),
     )
-    return _signature_from_hash32(with_hashes)
-
-
-def _signature_from_hashes64(hs_df: DataFrame) -> DataFrame:
-    """(doc_id, hs64) → (doc_id, sig): signatures from the 64-bit
-    shingle-hash proxy. Masking to 32 bits reproduces exactly the
-    hs the string pipeline fed the permutation fold, so signatures
-    are bit-identical to `_signature_from_shingles`."""
-    return _signature_from_hash32(
-        hs_df.select(
-            "doc_id",
-            F.transform("hs64", lambda h: h.bitwiseAND(F.lit(0xFFFFFFFF))).alias("hs"),
-        )
-    )
-
-
-def _signature_from_hash32(with_hashes: DataFrame) -> DataFrame:
-    """(doc_id, hs: array<bigint> of 32-bit-masked shingle hashes) →
-    (doc_id, sig). Shared tail of both signature entries; see
-    `_signature_from_shingles` for the fold design notes."""
     consts_a = F.array(*[F.lit(a) for a, _ in PERMS])
     consts_b = F.array(*[F.lit(b) for _, b in PERMS])
     init = F.expr(f"array_repeat(CAST(NULL AS BIGINT), {NUM_PERMS})")
@@ -197,8 +180,10 @@ def _signature_from_hash32(with_hashes: DataFrame) -> DataFrame:
 
 def minhash_signature(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-doc MinHash signature: sig[i] = min over shingles of
-    (a_i*h + b_i) mod p. Pure scan-side map — no shuffle, no UDF."""
-    return _signature_from_shingles(doc_shingles(df, id_col, text_col))
+    (a_i*h + b_i) mod p over the 32-bit shingle hashes, the same path
+    x02 and minhash_dedup_pairs run. Pure scan-side map — no shuffle,
+    no UDF."""
+    return _signature_from_hashes64(doc_shingle_hashes(df, id_col, text_col))
 
 
 LSH_BUCKET_CAP = 50  # successors each doc pairs with inside one (band, key) bucket
@@ -391,13 +376,11 @@ def _ngram_shared_counts(
     same identity contract and collision analysis as
     doc_shingle_hashes) and the tokenize+shingle corpus pass runs ONCE
     into a MEMORY_AND_DISK cache instead of once per consumer (guide
-    §1/§5 — four scans of the heaviest map in the workload). Cache
-    lifecycle as in minhash_dedup_pairs: lazy persist, freed by the
-    caller's clearCache() between queries."""
-    exploded = (
+    §1/§5 — four scans of the heaviest map in the workload). The
+    release is the caller's query scope (cache.py)."""
+    exploded = persist(
         doc_shingle_hashes(df, id_col, text_col, n)
         .select("doc_id", F.explode("hs64").alias("gram"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     if df_cap is not None:
         rare = (
@@ -480,14 +463,8 @@ def minhash_dedup_pairs(
     candidate-doc shingles behind a broadcast+repartition (the
     broadcast barrier serializes the critical path that the
     recompute-per-branch plan overlaps — sf1 7.6 s), and persist
-    combined with that scoping (10.3 s).
-
-    CACHE LIFECYCLE: the persist is lazy and this function returns an
-    unmaterialized DataFrame, so nothing here can unpersist it —
-    Spark frees the blocks at context shutdown, and long-lived
-    sessions issuing MANY dedup queries should call
-    ``spark.catalog.clearCache()`` between queries (bench.py and
-    sweep.py both do); disk-backed blocks are not LRU-evicted.
+    combined with that scoping (10.3 s). The persist is lazy; the
+    caller's query scope releases it (cache.py).
 
     WHAT IS PERSISTED (r12, guide §5/§2.3): the 64-bit shingle-HASH
     arrays, not the gram strings — shingle identity is all any
@@ -497,9 +474,7 @@ def minhash_dedup_pairs(
     the string pipeline: injective on every tested corpus
     (collision_check_r12.py) → bit-identical results; see
     doc_shingle_hashes for the 100 TB collision analysis."""
-    grams = doc_shingle_hashes(df, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    grams = persist(doc_shingle_hashes(df, id_col, text_col))
     cands = lsh_candidate_pairs(_signature_from_hashes64(grams))
     ga = grams.select(F.col("doc_id").alias("id_a"), F.col("hs64").alias("grams_a"))
     gb = grams.select(F.col("doc_id").alias("id_b"), F.col("hs64").alias("grams_b"))

@@ -24,7 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from database_query_processor_spark.cache import persist, scope
 
 PR_SCALE = 10**12  # fixed-point scale for rank mass
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as a ratio
@@ -50,62 +51,53 @@ def pagerank_fixedpoint(
     connected_components pattern. At 100 TB the edge list is the
     only large operand — it is hash-partitioned once on src and
     every round's join reuses that partitioning; ranks are
-    node-cardinality (small side) and broadcast while they fit."""
-    sym = (
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-        .repartition("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # deg feeds every iteration's contribution join plus the node set:
-    # unpersisted it would re-aggregate the (persisted) edge list once
-    # per iteration — 5 redundant groupBys (r12, guide §2.1). It is
-    # node-cardinality, the smallest frame in the algorithm.
-    deg = (
-        sym.groupBy("src")
-        .agg(F.count("*").alias("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nodes = deg.select(F.col("src").alias("node_id"))
-    n = nodes.count()
-    if n == 0:
-        # Empty edge set (e.g. a dedup-pair feed that found nothing):
-        # no nodes, so the result is an empty ranks frame — not a
-        # driver-side ZeroDivisionError from scale // n.
-        sym.unpersist()
-        deg.unpersist()
-        return nodes.select("node_id", F.lit(0).cast("long").alias("rank"))
-    base = (15 * scale // 100) // n
-    ranks = nodes.select("node_id", F.lit(scale // n).alias("rank"))
-    for _ in range(iters):
-        contrib = (
-            sym.join(deg, "src")
-            .join(ranks, sym.src == ranks.node_id)
-            .select("dst", F.expr("rank DIV deg").alias("c"))
+    node-cardinality (small side) and broadcast while they fit.
+
+    The symmetrized edges and degrees are persisted in this call's own
+    scope (cache.py) and released on every exit path."""
+    with scope():
+        sym = persist(
+            edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+            .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+            .distinct()
+            .repartition("src")
         )
-        incoming = contrib.groupBy("dst").agg(F.sum("c").alias("inc"))
-        ranks = nodes.join(
-            incoming, nodes.node_id == incoming.dst, "left"
-        ).select(
-            "node_id",
-            (
-                F.lit(base)
-                + F.expr(
-                    f"({PR_DAMP_NUM} * coalesce(inc, 0L)) DIV {PR_DAMP_DEN}"
-                )
-            ).alias("rank"),
-        )
-        ranks = ranks.localCheckpoint(eager=False)
-    # The final checkpoint must materialize BEFORE sym is released
-    # (lazy checkpoint + unpersist would recompute contributions from
-    # an evicted edge list); eager-checkpoint the result, then drop the
-    # persisted symmetrized edges — otherwise every pagerank call leaks
-    # one MEMORY_AND_DISK edge-list copy for the session's lifetime.
-    ranks = ranks.localCheckpoint(eager=True)
-    sym.unpersist()
-    deg.unpersist()
-    return ranks
+        # deg feeds every iteration's contribution join plus the node set:
+        # unpersisted it would re-aggregate the (persisted) edge list once
+        # per iteration — 5 redundant groupBys (r12, guide §2.1). It is
+        # node-cardinality, the smallest frame in the algorithm.
+        deg = persist(sym.groupBy("src").agg(F.count("*").alias("deg")))
+        nodes = deg.select(F.col("src").alias("node_id"))
+        n = nodes.count()
+        if n == 0:
+            # Empty edge set (e.g. a dedup-pair feed that found nothing):
+            # no nodes, so the result is an empty ranks frame — not a
+            # driver-side ZeroDivisionError from scale // n.
+            return nodes.select("node_id", F.lit(0).cast("long").alias("rank"))
+        base = (15 * scale // 100) // n
+        ranks = nodes.select("node_id", F.lit(scale // n).alias("rank"))
+        for _ in range(iters):
+            contrib = (
+                sym.join(deg, "src")
+                .join(ranks, sym.src == ranks.node_id)
+                .select("dst", F.expr("rank DIV deg").alias("c"))
+            )
+            incoming = contrib.groupBy("dst").agg(F.sum("c").alias("inc"))
+            ranks = nodes.join(
+                incoming, nodes.node_id == incoming.dst, "left"
+            ).select(
+                "node_id",
+                (
+                    F.lit(base)
+                    + F.expr(
+                        f"({PR_DAMP_NUM} * coalesce(inc, 0L)) DIV {PR_DAMP_DEN}"
+                    )
+                ).alias("rank"),
+            )
+            ranks = ranks.localCheckpoint(eager=False)
+        # materialize BEFORE the scope releases sym/deg (a lazy checkpoint
+        # would recompute contributions from the released edge list)
+        return ranks.localCheckpoint(eager=True)
 
 
 def sql_pagerank(edges_sql: str, iters: int = PR_ITERS, scale: int = PR_SCALE) -> str:
@@ -166,24 +158,20 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     that is ~8 recomputations of a lineitem self-join (92 Exchanges in
     the r12 plan audit). All three are edge-bounded (|und| ≤ m,
     |deg| ≤ 2m, |oriented| = |und|), so MEMORY_AND_DISK persistence is
-    safe at any scale that can hold the edge list at all. Same cache
-    lifecycle as minhash_dedup_pairs: the persists are lazy, nothing
-    here can unpersist them (the returned frame is unmaterialized);
-    bench/sweep call clearCache() between queries."""
-    und = (
+    safe at any scale that can hold the edge list at all. The persists
+    are lazy; the caller's query scope releases them (cache.py)."""
+    und = persist(
         edges.select(
             F.least("id_a", "id_b").alias("u"), F.greatest("id_a", "id_b").alias("v")
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    deg = (
+    deg = persist(
         und.select(F.col("u").alias("node"))
         .union(und.select("v"))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # orient src -> dst by (deg, id) rank; carry dst's rank for wedge ordering
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
@@ -192,11 +180,11 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = ranked.select(
+    oriented = persist(ranked.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("dstd"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     a, b = oriented.alias("a"), oriented.alias("b")
     wedge = a.join(b, "src").where(
         (F.col("a.dstd") < F.col("b.dstd"))

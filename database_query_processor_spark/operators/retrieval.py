@@ -32,10 +32,10 @@ both engines bit-correct.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from database_query_processor_spark.cache import persist
 from database_query_processor_spark.functions.text import tokens
 
 BM25_K1 = 1.2
@@ -706,19 +706,19 @@ def bm25_hard_negatives(
     ≤m rows per query BEFORE the window exchange — the (query × doc)
     score matrix never ships; the dup screen (a broadcast inverted
     index) then touches only queries × m rows. The token table is
-    persisted (one tokenize pass feeds dl, qterms, tf —
-    same lifecycle contract as minhash_dedup_pairs' shingle cache).
+    persisted (one tokenize pass feeds dl, qterms, tf), released by
+    the caller's query scope (cache.py).
     At production query-set sizes, additionally df-cap the query
     vocabulary (drop stop-terms) exactly like x04 — the residual
     term fan-out is bounded by Σ_t df(t)·qf(t) and stop-terms
     dominate it."""
     from database_query_processor_spark.operators.corpus import jaccard_decontaminate
 
-    toks = df.select(
+    toks = persist(df.select(
         F.col(id_col).alias("doc_id"),
         query_cond.alias("is_q"),
         F.explode(tokens(text_col)).alias("tok"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     cand = toks.filter(~F.col("is_q"))
     dl = cand.groupBy("doc_id").agg(F.count("*").alias("dl"))
     corpus = dl.agg(

@@ -29,9 +29,10 @@ from __future__ import annotations
 import random
 
 import numpy as np
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from database_query_processor_spark.cache import persist
 
 NUM_HYPERPLANES = 6
 _EMB_DIM = 64
@@ -931,11 +932,8 @@ def semantic_dedup(
     # unpersisted, the O(cells·dim)-per-row argmax assignment (the
     # measured dominant cost at 10x scale, see docstring) re-evaluates
     # once per reference (r12, guide §2.1). Row-bounded by the corpus;
-    # cache lifecycle as minhash_dedup_pairs (lazy persist, caller
-    # clearCache between queries).
-    assigned = _assign_cells(df, id_col, vec_col, cents).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # the caller's query scope releases it (cache.py).
+    assigned = persist(_assign_cells(df, id_col, vec_col, cents))
 
     def _drop(pdf):
         import pandas as pd

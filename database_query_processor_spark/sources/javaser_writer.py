@@ -332,11 +332,12 @@ def write_table(
     through the driver partition by partition (toLocalIterator +
     drain — bounded driver memory; the consumer is a single-node
     engine, so a single stream is the point). Stats are one extra
-    distributed aggregate: exact count + HLL distinct per column
-    (costing stats — approximation is what every optimizer uses)."""
+    distributed aggregate, `stats.table_stats` (exact count + HLL
+    distinct per column: costing stats, where approximation is what
+    every optimizer uses), in the layout `stats.parse_stat` reads."""
     import os
 
-    from pyspark.sql import functions as F
+    from database_query_processor_spark.sources.stats import table_stats
 
     table = table or os.path.basename(out_prefix)
     cols = _ref_cols(df, table, attr_sizes)
@@ -344,22 +345,8 @@ def write_table(
     with open(out_prefix + ".md", "wb") as fh:
         fh.write(schema_bytes(df, table, attr_sizes))
     if stats:
-        # Distinct counts via HLL (approx_count_distinct, ~2% rel.
-        # error): the .stat file feeds the reference optimizer's
-        # SELECTIVITY math only (PlanCost.java reads it to cost
-        # plans), where approximate cardinalities are the norm — the
-        # estimate never affects query RESULTS. HLL of a non-empty
-        # column is >= 1, so a degenerate 0 estimate can only occur
-        # for all-NULL columns (unreachable for reference-shaped
-        # tables, whose schema has no nullable attributes).
-        agg = df.agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[F.approx_count_distinct(c).alias(f"_d{i}")
-              for i, (c, _, _) in enumerate(cols)],
-        ).first()
         with open(out_prefix + ".stat", "w") as fh:
-            fh.write(f"{agg['_n']}\n")
-            fh.write(" ".join(str(agg[f"_d{i}"]) for i in range(len(cols))) + "\n")
+            fh.write(table_stats(df).to_stat_text() + "\n")
     w = JavaSerWriter()
     with open(out_prefix + ".tbl", "wb") as fh:
         for i, row in enumerate(df.toLocalIterator()):

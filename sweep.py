@@ -20,6 +20,7 @@ import re
 import sys
 import time
 
+from database_query_processor_spark.cache import scope
 from database_query_processor_spark.session import get_spark
 from database_query_processor_spark.workload import all_specs
 from tests.oracle import compare, duckdb_run, hashed_compare
@@ -94,24 +95,20 @@ def main() -> int:
     spark = get_spark(**_master_kwargs())
     n_match = n_rows = n_bad = 0
     for spec in specs:
-        # builders that persist() intermediates (x02/x04/x24 …) would
-        # otherwise accumulate one MEMORY_AND_DISK copy per query in
-        # this long-lived session — disk-backed blocks are not
-        # LRU-evicted and live until context shutdown
-        spark.catalog.clearCache()
         t0 = time.time()
         try:
-            df = spec.build(spark, sf_dir)
-            if spec.oracle is None:
-                rows = df.count()
-                print(f"{time.time() - t0:7.2f}s {spec.name} ROWS-ONLY ({rows} rows)")
-                n_rows += 1
-                continue
-            use_hashed = any(spec.name.startswith(p) for p in hashed)
-            if use_hashed:
-                probs = hashed_compare(df, spec.oracle, sf_dir)
-            else:
-                probs = compare(df, duckdb_run(spec.oracle, sf_dir))
+            with scope():  # releases what the spec's operators persisted
+                df = spec.build(spark, sf_dir)
+                if spec.oracle is None:
+                    rows = df.count()
+                    print(f"{time.time() - t0:7.2f}s {spec.name} ROWS-ONLY ({rows} rows)")
+                    n_rows += 1
+                    continue
+                use_hashed = any(spec.name.startswith(p) for p in hashed)
+                if use_hashed:
+                    probs = hashed_compare(df, spec.oracle, sf_dir)
+                else:
+                    probs = compare(df, duckdb_run(spec.oracle, sf_dir))
         except Exception as exc:  # noqa: BLE001 - harness reports, never dies
             print(f"{time.time() - t0:7.2f}s {spec.name} ERROR {type(exc).__name__}: {exc}")
             n_bad += 1

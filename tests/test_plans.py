@@ -727,9 +727,11 @@ def test_x02_minhash_plan_shape(spark):
 
 def test_minhash_signature_fused_fold_matches_reference(spark):
     """r11: the 64 permutation mins come from ONE aggregate() pass
-    over the hash array. Pin bit-equality against the definitional
-    per-permutation array_min(transform(...)) formulation, including
-    the empty-shingle case (all-NULL signature)."""
+    over the hash array. Pin bit-equality of the production entry
+    (64-bit shingle hashes, masked) against the definitional
+    per-permutation array_min(transform(...)) formulation over the
+    `doc_shingles` gram strings, so string and hash signatures agree,
+    including the empty-shingle case (all-NULL signature)."""
     from pyspark.sql import functions as F
 
     from database_query_processor_spark.operators import dedup as D
@@ -745,7 +747,7 @@ def test_minhash_signature_fused_fold_matches_reference(spark):
         ["doc_id", "text"],
     )
     grams = D.doc_shingles(docs, "doc_id", "text")
-    fused = D._signature_from_shingles(grams)
+    fused = D.minhash_signature(docs, "doc_id", "text")
     ref_sig = F.array(
         *[
             F.array_min(

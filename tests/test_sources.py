@@ -367,6 +367,21 @@ def test_stat_sidecar_roundtrip(spark):
         parse_stat("5\n1\t2", ["k"])
 
 
+def test_write_table_stat_parses(spark, tmp_path):
+    """The `.stat` that javaser_writer.write_table exports reads back
+    through parse_stat: one writer, the reference's tab layout."""
+    from database_query_processor_spark.sources.javaser_writer import write_table
+    from database_query_processor_spark.sources.stats import parse_stat
+
+    df = spark.createDataFrame(
+        [(i, f"s{i % 4}", float(i % 5)) for i in range(25)], "k int, s string, r float"
+    )
+    write_table(df, str(tmp_path / "T25"))
+    st = parse_stat((tmp_path / "T25.stat").read_text(), df.columns)
+    assert st.row_count == 25
+    assert st == table_stats(df)  # the HLL distincts, not exact ones
+
+
 def test_snapshot_isolation_and_immutability(spark, tmp_path):
     """Time travel contract: a committed snapshot's contents never
     change under later commits; data files are immutable (re-adding a

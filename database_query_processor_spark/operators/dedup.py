@@ -274,51 +274,30 @@ def _bucket_pairs(
     Returns (a, b) payload pairs; callers project and ``distinct()``
     across bands themselves.
 
-    The two paths materialize buckets differently, and the difference
-    IS the scale story:
-
-    * ``cap=None`` groups via sort_array(collect_list) — the whole
-      bucket becomes ONE aggregation-buffer array row, fine at test
-      scales (real minhash buckets measured max 4 docs at sf0.1/sf1)
-      but a 100M-doc degenerate bucket would blow Spark's 2 GB
-      single-row limit. That is acceptable ONLY because this path is
-      the oracle-parity / recall-testing setting; production callers
-      get a cap by default.
-    * capped (the DEFAULT) never builds a bucket row at all: ONE
-      window function — collect_list over the bounded row frame
-      (1 FOLLOWING, cap FOLLOWING) — gives each row its next ≤cap
-      successors in bucket order, the EXACT same sorted-chain pair
-      set as slicing a collected array, with per-ROW state bounded by
-      ``cap`` and the bucket itself held in WindowExec's spillable
-      row buffer (disk-backed beyond the in-memory threshold), never
-      a single row. A 100M-doc flood bucket costs one sorted spill,
-      not a 2 GB array. Singleton buckets (the vast majority of
-      banded rows) emit an empty frame that explodes to nothing — no
-      pre-filter pass needed. Measured at sf0.1 on the x02 pairing
-      stage (80k banded rows, min-of-5 on a cached input): bounded
-      frame 0.50 s vs collect_list+slice 0.72 s vs 50-lead-expression
-      window 1.09 s vs rank+shard self-join 3.4 s whole-query (the
-      self-join re-evaluates the signature pipeline per side — the
-      reason bucket-then-pair replaced self-joins in the first
-      place). Determinism: payloads are unique within a bucket (one
-      row per doc per band), so the orderBy has no ties and the
-      chain is reproducible across runs and partitionings."""
-    if cap is None:
-        buckets = (
-            banded.groupBy(*key_cols)
-            .agg(F.sort_array(F.collect_list(payload)).alias("items"))
-            .filter(F.size("items") >= 2)
-        )
-        return buckets.select(
-            F.posexplode("items").alias("_pos", "a"), F.col("items")
-        ).select(
-            "a",
-            F.explode(F.slice("items", F.col("_pos") + 2, F.size("items"))).alias("b"),
-        )
-
+    Buckets never become a row: ONE window function — collect_list
+    over the bounded row frame (1 FOLLOWING, cap FOLLOWING), or
+    (1 FOLLOWING, UNBOUNDED FOLLOWING) without a cap — gives each row
+    its successors in bucket order, with per-ROW state bounded by
+    ``cap`` (all successors without one: the all-pairs output is
+    O(N²) anyway) and the bucket itself held in WindowExec's spillable row
+    buffer (disk-backed beyond the in-memory threshold), never a
+    single aggregation-buffer row (which a 100M-doc degenerate bucket
+    would push past Spark's 2 GB single-row limit). A 100M-doc flood
+    bucket costs one sorted spill. Singleton buckets (the vast
+    majority of banded rows) emit an empty frame that explodes to
+    nothing — no pre-filter pass needed. Measured at sf0.1 on the x02
+    pairing stage (80k banded rows, min-of-5 on a cached input):
+    bounded frame 0.50 s vs collect_list+slice 0.72 s vs
+    50-lead-expression window 1.09 s vs rank+shard self-join 3.4 s
+    whole-query (the self-join re-evaluates the signature pipeline per
+    side — the reason bucket-then-pair replaced self-joins in the
+    first place). Determinism: payloads are unique within a bucket
+    (one row per doc per band), so the orderBy has no ties and the
+    chain is reproducible across runs and partitionings."""
     from pyspark.sql.window import Window
 
-    w_s = Window.partitionBy(*key_cols).orderBy("_p").rowsBetween(1, cap)
+    end = Window.unboundedFollowing if cap is None else cap
+    w_s = Window.partitionBy(*key_cols).orderBy("_p").rowsBetween(1, end)
     # the successor array materializes in its own projection — window
     # expressions are not allowed inside a generator (explode)
     chained = banded.select(*key_cols, payload.alias("_p")).select(

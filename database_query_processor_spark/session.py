@@ -83,8 +83,9 @@ from pyspark.sql import SparkSession
 def _default_cpus() -> int:
     """SPARK_GRAFT_CPUS, parsed lazily with a clear error — an
     import-time int('') would kill every entry point with a bare
-    ValueError before argparse could say anything useful."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    ValueError before argparse could say anything useful. Unset, it
+    is the number of cores this process may run on."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     try:
         n = int(raw)
     except ValueError as exc:

@@ -48,9 +48,11 @@ def table_stats(df: DataFrame, exact: bool = False) -> TableStats:
         F.count(F.lit(1)).alias("__rows"),
         *[agg(F.col(c)).alias(c) for c in df.columns],
     ).first()
+    # HLL++ can overshoot (25 distinct of 25 rows reads 26); PlanCost
+    # needs distinct <= tuples, so clamp at the exact row count
     return TableStats(
         row_count=row["__rows"],
-        distinct_counts={c: row[c] for c in df.columns},
+        distinct_counts={c: min(row[c], row["__rows"]) for c in df.columns},
     )
 
 

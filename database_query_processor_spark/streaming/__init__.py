@@ -1,29 +1,2 @@
 """Structured Streaming operators (no reference analog — the reference
 is strictly batch, single executeQuery pass, src/QueryMain.java:162-194)."""
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def normalize_event_ts(stream: DataFrame, col: str = "ts") -> DataFrame:
-    """Normalize the event-time column to TimestampType for watermarking.
-
-    The events table has shipped `ts` as either bigint nanos or native
-    TIMESTAMP_NTZ depending on the datagen version; watermarks require
-    TimestampType (instant semantics). Session tz is pinned UTC, so the
-    NTZ -> TIMESTAMP cast is wall-clock-preserving and oracle results
-    are unchanged.
-    """
-    dtype = dict(stream.dtypes).get(col)
-    if dtype is None:
-        raise ValueError(f"normalize_event_ts: column {col!r} not in {stream.columns}")
-    if dtype == "bigint":
-        return stream.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    if dtype == "timestamp_ntz":
-        return stream.withColumn(col, F.col(col).cast("timestamp"))
-    if dtype == "timestamp":
-        return stream
-    raise ValueError(
-        f"normalize_event_ts: column {col!r} has unhandled dtype {dtype!r}; "
-        "expected bigint nanos, timestamp_ntz, or timestamp"
-    )

@@ -44,6 +44,8 @@ from database_query_processor_spark.operators.relational import merge_into
 from database_query_processor_spark.sources import snapshots as SNAP
 from database_query_processor_spark.workdir import scratch_dir
 
+from .run import drive
+
 
 def apply_cdc_epoch(
     spark: SparkSession,
@@ -215,9 +217,5 @@ def run_cdc_apply(
     writer = stream.writeStream.foreachBatch(apply_epoch)
     if checkpoint_dir is not None:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drive(writer)
     return SNAP.read_version(spark, table)

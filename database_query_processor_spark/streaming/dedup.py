@@ -15,12 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windows import (
-    ROCKSDB_STATE_STORE,
-    _conf_scope,
-    _events_stream,
-    _run_to_parquet_sink,
-)
+from .run import events_stream, parquet_sink, rocksdb_state
 
 
 def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -30,13 +25,14 @@ def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     eviction apply — driven to completion into the DISTRIBUTED
     parquet file sink (the deduped output is O(input) rows; a
     memory sink would collect them all to the driver — see
-    _run_to_parquet_sink). State runs on RocksDB: the dedup key set
-    is O(input) inside the watermark horizon, and the heap-backed
+    run.parquet_sink). State runs on RocksDB with the input-derived
+    state partition count (run.rocksdb_state): the dedup key set is
+    O(input) inside the watermark horizon, and the heap-backed
     default store degraded 2.8x at 100M keys (712 s -> 252.8 s,
     PROBE_STREAM_100M_r10.json). Returns the committed result read
     back: one row per distinct key."""
-    with _conf_scope(spark, ROCKSDB_STATE_STORE):
-        stream = _events_stream(spark, sf_dir)
+    with rocksdb_state(spark, sf_dir):
+        stream = events_stream(spark, sf_dir)
         dd = (
             stream.withWatermark("ts", "10 minutes")
             .dropDuplicates(["user_id", "event_type", "ts"])
@@ -46,4 +42,4 @@ def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("ts").cast("timestamp_ntz").alias("ts"),
             )
         )
-        return _run_to_parquet_sink(dd, "dedup")
+        return parquet_sink(dd, "dedup")

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from database_query_processor_spark.catalog import load_table
 
-from .windows import _events_stream, _run_to_memory_sink, _run_to_parquet_sink
+from .run import events_stream, memory_sink, parquet_sink
 
 
 def purchase_click_attribution(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
@@ -55,7 +55,7 @@ def run_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (complete-mode memory sink — the full aggregate re-emits per
     batch, which is what makes the final table equal the batch
     rollup)."""
-    stream = _events_stream(spark, sf_dir)
+    stream = events_stream(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
     )
@@ -68,7 +68,7 @@ def run_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value"),
     )
-    return _run_to_memory_sink(agg, "enrich")
+    return memory_sink(agg, "enrich")
 
 
 def run_purchase_click_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,8 +76,8 @@ def run_purchase_click_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the finite events parquet. The match set is O(input), so the sink
     is the DISTRIBUTED parquet file sink (append mode, executor-side
     writes), not the driver-collecting memory sink — see
-    _run_to_parquet_sink for the measured rationale."""
-    purchases = _events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    clicks = _events_stream(spark, sf_dir).filter(F.col("event_type") == "click")
+    run.parquet_sink for the measured rationale."""
+    purchases = events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    clicks = events_stream(spark, sf_dir).filter(F.col("event_type") == "click")
     out = purchase_click_attribution(purchases, clicks)
-    return _run_to_parquet_sink(out, "attribution")
+    return parquet_sink(out, "attribution")

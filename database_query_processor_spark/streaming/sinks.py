@@ -14,9 +14,12 @@ and downstream consumers read the union of epochs.
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from database_query_processor_spark.workdir import scratch_dir
+
+from .run import drive, events_stream
 
 
 def run_foreach_batch_sink(spark: SparkSession, sf_dir: str, out_dir: str | None = None) -> DataFrame:
@@ -26,15 +29,11 @@ def run_foreach_batch_sink(spark: SparkSession, sf_dir: str, out_dir: str | None
     redelivery). Returns the re-read union aggregated across epochs —
     equal to the batch groupBy regardless of how the stream was
     micro-batched."""
-    from .windows import _events_stream
-
-    from database_query_processor_spark.workdir import scratch_dir
-
     # scratch_dir (not a raw uuid /tmp path): the result directory is a
     # full table copy per invocation and must die with the process, not
     # accumulate until the disk fills (the leak workdir.py exists to fix)
     out = out_dir or scratch_dir("dqps_s07_")
-    stream = _events_stream(spark, sf_dir)
+    stream = events_stream(spark, sf_dir)
 
     def write_epoch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -44,11 +43,7 @@ def run_foreach_batch_sink(spark: SparkSession, sf_dir: str, out_dir: str | None
             .parquet(f"{out}/epoch={batch_id}")
         )
 
-    q = stream.writeStream.foreachBatch(write_epoch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drive(stream.writeStream.foreachBatch(write_epoch))
     return (
         spark.read.schema("event_type string, n bigint")
         .parquet(out)

@@ -27,13 +27,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windows import (
-    ROCKSDB_STATE_STORE,
-    _conf_scope,
-    _events_stream,
-    _run_to_memory_sink,
-    _run_to_parquet_sink,
-)
+from .run import events_stream, memory_sink, parquet_sink, rocksdb_state
 
 
 STATE_SCHEMA = "n BIGINT, first_us BIGINT, last_us BIGINT"
@@ -79,8 +73,8 @@ def run_user_profile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     to completion. The final per-user profile is the row with the
     largest n_events (update mode emits one row per key per batch) —
     reduced batch-side so the result is batching-invariant."""
-    stream = _events_stream(spark, sf_dir)
-    sink = _run_to_memory_sink(user_profiles(stream), "user_profiles", mode="update")
+    stream = events_stream(spark, sf_dir)
+    sink = memory_sink(user_profiles(stream), "user_profiles", mode="update")
     return (
         sink
         .groupBy("user_id")
@@ -439,7 +433,7 @@ def session_expiry_tws(stream: DataFrame) -> DataFrame:
 
 def run_session_expiry_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive session_expiry_tws over the finite events parquet
-    (RocksDB state store, update-mode memory sink). Every session is
+    (RocksDB state store, parquet file sink). Every session is
     emitted exactly once (a session closes once under any batching),
     so no reduction is needed — only a typed projection.
 
@@ -463,9 +457,9 @@ def run_session_expiry_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "run_session_expiry_stream requires a SINGLE-FILE events.parquet "
             f"(single-microbatch replay; the closed_by oracle depends on it): {events_path}"
         )
-    sink = _run_tws_topology(
-        spark, sf_dir, session_expiry_tws, "session_expiry", sink="parquet"
-    )
+    with rocksdb_state(spark, sf_dir):
+        stream = events_stream(spark, sf_dir)
+        sink = parquet_sink(session_expiry_tws(stream), "session_expiry")
     return sink.select(
         "user_id",
         F.timestamp_micros(F.col("start_us")).cast("timestamp_ntz").alias("session_start"),
@@ -474,66 +468,13 @@ def run_session_expiry_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STREAM_STATE_BYTES_PER_PARTITION = 256 * 1024
-
-
-def _stream_state_partitions(spark: SparkSession, input_bytes: int) -> int:
-    """Number of state-store partitions for a stateful stream, derived
-    from the INPUT SIZE instead of inherited from the session's batch
-    shuffle default (which tracks core count).
-
-    Why (r12, guide §2.2 "fewer, larger partitions" applied to state
-    stores): every state partition is a RocksDB instance whose commit
-    zips + fsyncs a snapshot to the checkpoint location EVERY
-    micro-batch — a fixed per-partition cost that, over-partitioned,
-    turns into an fsync storm. Measured on s12 at sf0.1 (2 MB input,
-    1500 keys, artifacts/S12_PROGRESS_r12.json): 32 partitions →
-    rocksdbCommitFileSyncLatencyMs sums 47-78 s per batch (contention:
-    ~2.3 s per tiny commit); 8 partitions → 1-4 s total; wall 5.4 →
-    4.5 s. The knee is ~256 KiB of batch input per partition
-    (4 partitions starves update parallelism: 5.98 s; 16 re-adds
-    commit cost: 5.14 s).
-
-    Scale behavior: the count grows linearly with input until capped
-    by defaultParallelism, so a 100 TB/day stream still gets
-    cluster-wide parallelism, while a small replay is never taxed
-    32 fsyncs per batch for kilobytes of state. Deriving from data
-    rather than cores also makes the bench's 8-core and 32-core runs
-    use the SAME state partitioning (comparable scaling ratios)."""
-    by_bytes = max(1, round(input_bytes / STREAM_STATE_BYTES_PER_PARTITION))
-    return min(spark.sparkContext.defaultParallelism, by_bytes)
-
-
-def _run_tws_topology(
-    spark: SparkSession, sf_dir: str, transform, prefix: str,
-    sink: str = "memory",
-) -> DataFrame:
-    """Shared transformWithState drive scaffold: set the RocksDB state
-    store provider (transformWithState requires it) and the
-    input-derived state partition count (see _stream_state_partitions)
-    for the run's lifetime, stream events through ``transform``, and
-    return the sink contents.
-
-    ``sink``: 'memory' (update-mode memory sink — right for the
-    small per-key-aggregate outputs, s10/s11) or 'parquet' (the
-    DISTRIBUTED file sink — required when the output is O(input)
-    rows, s12's sessions; see windows._run_to_parquet_sink for the
-    measured driver-collect pathology)."""
-    input_bytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    parts = _stream_state_partitions(spark, input_bytes)
-    settings = {**ROCKSDB_STATE_STORE, "spark.sql.shuffle.partitions": str(parts)}
-    with _conf_scope(spark, settings):
-        stream = _events_stream(spark, sf_dir)
-        if sink == "parquet":
-            return _run_to_parquet_sink(transform(stream), prefix)
-        return _run_to_memory_sink(transform(stream), prefix, mode="update")
-
-
 def run_recent_top_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive recent_top_tws over the finite events parquet (RocksDB
     state store, update-mode memory sink) and reduce to each user's
     final emission."""
-    sink = _run_tws_topology(spark, sf_dir, recent_top_tws, "recent_top")
+    with rocksdb_state(spark, sf_dir):
+        stream = events_stream(spark, sf_dir)
+        sink = memory_sink(recent_top_tws(stream), "recent_top", mode="update")
     final = F.max(F.struct("n_seen", "top3")).alias("_f")
     return (
         sink.groupBy("user_id")
@@ -548,7 +489,9 @@ def run_daily_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion (file readStream → RocksDB-backed state → update-mode
     memory sink), then reduce update rows to the final count per
     (event_type, day)."""
-    sink = _run_tws_topology(spark, sf_dir, daily_counts_tws, "daily_counts")
+    with rocksdb_state(spark, sf_dir):
+        stream = events_stream(spark, sf_dir)
+        sink = memory_sink(daily_counts_tws(stream), "daily_counts", mode="update")
     return (
         sink
         .groupBy("event_type", "day_us")

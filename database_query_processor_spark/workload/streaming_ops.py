@@ -721,7 +721,7 @@ def stream_session_expiry_tws(spark, sf_dir):
     user fires via handleExpiredTimer when the WATERMARK passes
     last + gap, emitting the user's final session ('timer') — the
     rows no data-close can ever produce. RocksDB state store,
-    update-mode memory sink."""
+    parquet file sink."""
     from database_query_processor_spark.streaming.stateful import (
         run_session_expiry_stream,
     )

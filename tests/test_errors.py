@@ -8,7 +8,7 @@ import pytest
 
 from database_query_processor_spark.plans.dialect import translate
 from database_query_processor_spark.sources.javaser import JavaSerReader
-from database_query_processor_spark.streaming import normalize_event_ts
+from database_query_processor_spark.streaming.run import normalize_event_ts
 
 
 def test_dialect_rejects_non_query():

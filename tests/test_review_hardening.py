@@ -1156,6 +1156,8 @@ def test_sweep_empty_prefix_nonzero_exit():
 
 
 def test_session_rejects_bad_cpu_env(monkeypatch):
+    import os
+
     import pytest
 
     from database_query_processor_spark.session import _default_cpus
@@ -1168,6 +1170,9 @@ def test_session_rejects_bad_cpu_env(monkeypatch):
         _default_cpus()
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "16")
     assert _default_cpus() == 16
+    # unset: the cores this process may run on, not a fixed host's count
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert _default_cpus() == len(os.sched_getaffinity(0))
 
 
 def test_changed_files_rename_takes_new_path(monkeypatch):

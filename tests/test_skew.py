@@ -281,8 +281,8 @@ def test_bucket_pairs_capped_path_never_materializes_bucket_rows(spark):
     bucket keys) and execution-level (a
     5000-doc planted flood — 125x the cap, far beyond anything the
     small flood tests exercise — yields the exact O(N*cap) chain
-    count). The UNCAPPED path (oracle-parity, test scales only) keeps
-    the collect_list form by design."""
+    count). The UNCAPPED path (oracle-parity, test scales only) is
+    the same window path with an unbounded frame."""
     from database_query_processor_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signature,
@@ -308,14 +308,18 @@ def test_bucket_pairs_capped_path_never_materializes_bucket_rows(spark):
 
     assert cands.count() == sum(min(cap, n - 1 - i) for i in range(n))
 
-    # uncapped keeps the exact all-pairs collect_list AGGREGATE form
+    # uncapped is the same window path over (1, unbounded following),
+    # with no bucket aggregate either
     exact = lsh_candidate_pairs(
         minhash_signature(df.limit(60), "doc_id", "text"), bucket_cap=None
     )
     eplan = exact._sc._jvm.PythonSQLUtils.explainString(
         exact._jdf.queryExecution(), "simple"
     )
-    assert "collect_list" in eplan and "slice(items" in eplan, eplan[:1500]
+    assert "specifiedwindowframe(RowFrame, 1, unboundedfollowing$())" in eplan, eplan[:1500]
+    assert "HashAggregate(keys=[band" not in eplan, eplan[:1500]
+    assert "ObjectHashAggregate" not in eplan, eplan[:1500]
+    assert "slice(items" not in eplan, eplan[:1500]
 
 
 def test_p18_pins_the_measured_skew_winner(spark):

@@ -380,6 +380,7 @@ def test_write_table_stat_parses(spark, tmp_path):
     st = parse_stat((tmp_path / "T25.stat").read_text(), df.columns)
     assert st.row_count == 25
     assert st == table_stats(df)  # the HLL distincts, not exact ones
+    assert all(d <= st.row_count for d in st.distinct_counts.values()), st
 
 
 def test_snapshot_isolation_and_immutability(spark, tmp_path):

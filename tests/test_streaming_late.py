@@ -472,7 +472,7 @@ def test_session_expiry_requires_single_file_events(spark, tmp_path):
 def test_stream_state_partitions_follow_input_size(spark):
     """State partitions = input bytes / 256 KiB, rounded to nearest,
     at least 1 and at most defaultParallelism."""
-    from database_query_processor_spark.streaming.stateful import (
+    from database_query_processor_spark.streaming.run import (
         STREAM_STATE_BYTES_PER_PARTITION as B,
         _stream_state_partitions as parts,
     )
@@ -490,7 +490,7 @@ def test_conf_scope_restores_session_conf(spark):
     """_conf_scope sets its keys for the scope only: a preset key gets
     its old value back and an unset key is unset again, also when the
     body raises."""
-    from database_query_processor_spark.streaming.windows import _conf_scope
+    from database_query_processor_spark.streaming.run import _conf_scope
 
     preset, fresh = "spark.sql.shuffle.partitions", "spark.dqps.test.fresh"
     old = spark.conf.get(preset)
